@@ -1,4 +1,4 @@
-"""X4 — HTML → article extraction as an Arrow-batched pandas UDF.
+"""X4 — HTML → article extraction as one Arrow-batched mapInPandas pass.
 
 Reference: trafilatura.extract(content, include_comments=False,
 deduplicate=True, output_format="json", with_metadata=True)
@@ -14,7 +14,7 @@ trafilatura is not installed in this container, so extraction is pluggable:
 - Otherwise a deterministic pure-Python fallback parses <title>, <p> bodies
   and <meta name="date"> — stable output for tests and benchmarks.
 
-The per-row invariant tested in tests/test_extract.py: the vectorized UDF's
+The per-row invariant tested in tests/test_extract.py: the vectorized pass's
 ``text`` is byte-identical per url to ``extract_one`` applied row-at-a-time
 in the reference's loop style (03_extract_text.py:52-75).
 """
@@ -27,7 +27,7 @@ from typing import Iterator
 from urllib.parse import urlparse
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -118,47 +118,47 @@ def extract_one(html: bytes | None, url: str | None) -> dict | None:
     return _fallback_extract(html, url)
 
 
-_FIELDS = [f.name for f in EXTRACT_STRUCT.fields]
-_NULL_ROW = {k: None for k in _FIELDS}
+EXTRACTED_SCHEMA = StructType([StructField("url", StringType())] + EXTRACT_STRUCT.fields)
 
 
-@F.pandas_udf(EXTRACT_STRUCT)
-def extract_udf(
-    batches: Iterator[tuple[pd.Series, pd.Series]],
-) -> Iterator[pd.DataFrame]:
-    """Iterator-of-batches form so any heavyweight extractor state is built
-    once per python worker, not per batch (V1/V5 pattern, SURVEY §2.11)."""
-    for html_s, url_s in batches:
+def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """One Python pass per task: ``extract_one`` per row, and rows whose
+    ``text`` is NULL (F3) are dropped here, inside the pass."""
+    for pdf in batches:
         rows = []
-        for html, url in zip(html_s, url_s):
+        for url, html in zip(pdf["url"], pdf["html"]):
             out = extract_one(html, url)
-            rows.append(out if out is not None else _NULL_ROW)
-        yield pd.DataFrame(rows, columns=_FIELDS)
+            if out is not None and out["text"] is not None:
+                rows.append({"url": url, **out})
+        yield pd.DataFrame(rows, columns=EXTRACTED_SCHEMA.fieldNames())
 
 
 def extract_articles(pages: DataFrame) -> DataFrame:
     """The E2E extraction spine (reference path 03_extract_text.py:37-91):
 
-    pages -> extract UDF -> projection (P2) -> null-text drop (F3)
+    pages -> extraction + null-text drop (X4, P2, F3) in one mapInPandas
           -> dedup on (text, hostname) (D1).
 
-    Column pruning matters at scale: only (url, html) feed the UDF; `html`
-    (the wide binary column) is dropped before any shuffle — the dedup
-    shuffles (text, hostname, ...) but never the raw bytes.
+    The null-text drop runs inside the Python pass: a filter on a Python
+    UDF's output is pushed below the projection that computes it, and the
+    UDF then runs a second time for the filter.  ``mapInPandas`` output is
+    opaque to the optimizer, so the extractor runs once per row, in one
+    Python worker per task.
+
+    Column pruning matters at scale: only (url, html) feed the Python pass;
+    `html` (the wide binary column) never leaves it, so the dedup shuffles
+    (text, hostname, ...) but never the raw bytes.
     """
     from pyspark.sql import Window
 
-    flat = pages.select(
-        "url", extract_udf(F.col("html"), F.col("url")).alias("_e")
-    ).select("url", "_e.*")
+    flat = pages.select("url", "html").mapInPandas(_extract_batches, EXTRACTED_SCHEMA)
     # D1 with a deterministic survivor: the reference's 'keep first' depends
     # on file order (03:80); under parallelism the contract is min(url) per
     # (text, hostname) — same dedup set, reproducible representative
     # (SURVEY §7 'determinism under parallelism').
     w = Window.partitionBy("text", "hostname").orderBy("url")
     return (
-        flat.filter(F.col("text").isNotNull())
-        .withColumn("_rn", F.row_number().over(w))
+        flat.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )

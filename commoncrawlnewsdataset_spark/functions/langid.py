@@ -26,22 +26,29 @@ EN_STOPWORDS = [
 
 
 def _clean_tokens(text: Column) -> Column:
+    """Lower-cased whitespace tokens stripped to letters.  Tokens that strip
+    to '' stay in: they match no stopword."""
     toks = F.split(F.lower(text), r"\s+")
-    cleaned = F.transform(toks, lambda t: F.regexp_replace(t, r"[^a-zäöüß]", ""))
-    return F.filter(cleaned, lambda t: t != "")
-
-
-def stopword_hits(text: Column, stopwords: list[str]) -> Column:
-    arr = F.array(*[F.lit(w) for w in stopwords])
-    return F.size(F.filter(_clean_tokens(text), lambda t: F.array_contains(arr, t)))
+    return F.transform(toks, lambda t: F.regexp_replace(t, r"[^a-zäöüß]", ""))
 
 
 def lang_id(text: Column) -> Column:
-    """'de' / 'en' / 'und' (undetermined) by stopword-hit majority."""
-    de = stopword_hits(text, DE_STOPWORDS)
-    en = stopword_hits(text, EN_STOPWORDS)
-    return (
-        F.when(de > en, F.lit("de"))
-        .when(en > de, F.lit("en"))
-        .otherwise(F.lit("und"))
+    """'de' / 'en' / 'und' (undetermined) by stopword-hit majority.
+
+    The tokens are built once and folded into one signed count, German hits
+    minus English hits; the label is read off its sign with a single
+    reference.  Comparing two separate counts would put the token pipeline
+    into the plan once per count and per comparison (higher-order functions
+    are not subexpression-eliminated).  NULL text folds to NULL, which
+    ``coalesce`` maps to 'und'."""
+    de = F.array(*[F.lit(w) for w in DE_STOPWORDS])
+    en = F.array(*[F.lit(w) for w in EN_STOPWORDS])
+    diff = F.aggregate(
+        _clean_tokens(text),
+        F.lit(0),
+        lambda acc, t: acc
+        + F.array_contains(de, t).cast("int")
+        - F.array_contains(en, t).cast("int"),
     )
+    sign = F.coalesce(F.signum(diff).cast("int"), F.lit(0))
+    return F.element_at(F.array(F.lit("en"), F.lit("und"), F.lit("de")), sign + 2)

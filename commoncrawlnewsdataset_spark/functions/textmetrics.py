@@ -103,8 +103,20 @@ def quality_metrics_udf(text: pd.Series) -> pd.DataFrame:
     )
 
 
+# The metrics are a pure function of the text; the flag is an optimizer
+# barrier.  A filter on a Python UDF's output (F4's ``filter_quality``) is
+# pushed below the projection that computes it, and the UDF then runs twice,
+# once for the filter and once for the projection.  Catalyst pushes no
+# filter through a projection holding a nondeterministic expression, so
+# the UDF runs once per row.  The other barriers cost more: a
+# ``mapInPandas`` over the row ships every column through Arrow, not just
+# ``text``, and a repartition adds a shuffle.
+quality_metrics_udf = quality_metrics_udf.asNondeterministic()
+
+
 def with_quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """E2-style struct flatten (ref 04:67-69): append the 8 metric columns."""
+    """E2-style struct flatten (ref 04:67-69): append the 8 metric columns.
+    Later filters on them stay above the UDF (see ``quality_metrics_udf``)."""
     return df.withColumn("_m", quality_metrics_udf(F.col(text_col))).select(
         "*", "_m.*"
     ).drop("_m")

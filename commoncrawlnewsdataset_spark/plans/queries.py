@@ -21,6 +21,7 @@ Cross-engine determinism rules used throughout (validated by probes):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 import pandas as pd
@@ -1134,38 +1135,50 @@ FROM h
 # Vector queries over `embeddings` (SURVEY §2.11)
 # =========================================================================
 
+def _query_vec_from_footers(path: str) -> list[float] | None:
+    """The embedding of the min vec_id row, read with pyarrow, or None when
+    the footers cannot prove it equals the Spark probe: every row group's
+    vec_id statistics must report null_count == 0 (a NULL vec_id sorts
+    first in Spark and is skipped by a min) and a min.  Only the footer is
+    read to locate the min, then the single owning row group."""
+    import pyarrow.parquet as pq
+
+    f = pq.ParquetFile(path)
+    md = f.metadata
+    col = next(j for j in range(md.num_columns) if md.schema.column(j).path == "vec_id")
+    stats = [md.row_group(rg).column(col).statistics for rg in range(md.num_row_groups)]
+    if not stats or any(
+        st is None or not st.has_null_count or st.null_count != 0 or not st.has_min_max
+        for st in stats
+    ):
+        return None
+    rg = min(range(len(stats)), key=lambda r: stats[r].min)
+    tbl = f.read_row_group(rg, columns=["vec_id", "embedding"])
+    idx = tbl.column("vec_id").to_pylist().index(stats[rg].min)
+    return [float(x) for x in tbl.column("embedding")[idx].as_py()]
+
+
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
     """Deterministic query vector: the embedding of the min vec_id row.
 
     r8: resolved driver-side from the parquet footer/row groups (pyarrow)
     instead of a Spark TakeOrdered job — every ANN query used to pay one
     full cluster job just to fetch this one scalar parameter (guide §5:
-    the driver fetching a 1-row parameter is not data work).  Row-group
-    pruned: only vec_id columns are scanned to locate the min, then the
-    single owning row group's embedding column is read.  Falls back to the
-    original Spark probe on any layout surprise (e.g. a multi-file dir)."""
-    try:
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        f = pq.ParquetFile(f"{sf_dir}/embeddings.parquet")
-        best = None  # (vec_id, row_group index)
-        for rg in range(f.metadata.num_row_groups):
-            ids = f.read_row_group(rg, columns=["vec_id"]).column("vec_id")
-            i = pc.min_max(ids)["min"].as_py()
-            if best is None or i < best[0]:
-                best = (i, rg)
-        tbl = f.read_row_group(best[1], columns=["vec_id", "embedding"])
-        idx = tbl.column("vec_id").to_pylist().index(best[0])
-        return [float(x) for x in tbl.column("embedding")[idx].as_py()]
-    except Exception:
-        row = (
-            _t(spark, sf_dir, "embeddings")
-            .orderBy("vec_id")
-            .select("embedding")
-            .first()
-        )
-        return [float(x) for x in row["embedding"]]
+    the driver fetching a 1-row parameter is not data work).  The fast path
+    is taken only for a single-file table whose footers prove it exact;
+    any other layout runs the Spark probe."""
+    path = f"{sf_dir}/embeddings.parquet"
+    if os.path.isfile(path):
+        vec = _query_vec_from_footers(path)
+        if vec is not None:
+            return vec
+    row = (
+        _t(spark, sf_dir, "embeddings")
+        .orderBy("vec_id")
+        .select("embedding")
+        .first()
+    )
+    return [float(x) for x in row["embedding"]]
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2197,7 +2210,6 @@ def _ephemeral_run_dir(*subdirs: str) -> tuple[str, ...]:
     materialized before exit), with a 6h age sweep for leftovers from
     crashed sessions."""
     import atexit
-    import os
     import shutil
     import time as _time
     import uuid
@@ -2387,13 +2399,18 @@ def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     `documents`, so a green row proves: response-only filtering (request /
     warcinfo records dropped), header projection, and byte-intact payloads
     (md5 over the HTTP body)."""
-    from commoncrawlnewsdataset_spark.sources.pages import parse_warc_blobs
+    from commoncrawlnewsdataset_spark.schemas import WARC_RECORDS_SCHEMA
 
+    # `_t` spreads `documents` over defaultParallelism partitions, so the
+    # synthesis + parse pass below runs one Python worker per core
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
 
-    def build(batches):
+    def warc_roundtrip(batches):
+        """Synthesize one WARC blob per batch and parse it back in the same
+        Python pass: the bytes never cross Arrow between the two."""
         from datetime import datetime, timedelta
 
+        from commoncrawlnewsdataset_spark.sources.pages import _records_from_bytes
         from commoncrawlnewsdataset_spark.sources.warc import (
             build_request_record,
             build_response_record,
@@ -2415,12 +2432,12 @@ def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                         gzip_member=True,
                     )
                 )
-            yield pd.DataFrame({"content": [b"".join(chunks)]})
+            yield pd.DataFrame(
+                _records_from_bytes(b"".join(chunks)),
+                columns=WARC_RECORDS_SCHEMA.fieldNames(),
+            )
 
-    blobs = docs.select("doc_id", "text").repartition(8).mapInPandas(
-        build, "content binary"
-    )
-    recs = parse_warc_blobs(blobs)
+    recs = docs.select("doc_id", "text").mapInPandas(warc_roundtrip, WARC_RECORDS_SCHEMA)
     return recs.select(
         "id",
         "url",

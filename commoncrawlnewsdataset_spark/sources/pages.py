@@ -68,7 +68,7 @@ def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
 
 def parse_warc_blobs(blobs: DataFrame) -> DataFrame:
     """mapInPandas WARC parse of a `content: binary` column (shared by the
-    file scan above and the synthesized-bytes oracle query)."""
+    file scan above and the streaming ingest)."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -164,3 +164,71 @@ def test_pii_redact_is_pure_codegen(spark):
     assert "regexp_replace" in plan
     for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert bad not in plan
+
+
+def test_lang_id_tokenizes_once(spark):
+    """The token pipeline is built once and folded into one signed count:
+    the executed plan holds one split(lower(text)), and the labels keep the
+    stopword-majority contract, NULL text included."""
+    assert plan_of(Q.q_lang_id(spark, SF)).count("split(lower(") == 1
+
+    from commoncrawlnewsdataset_spark.functions.langid import lang_id
+
+    rows = [
+        (1, "Der Hund und die Katze sind nicht hier"),
+        (2, "The dog and the cat are not here, und"),
+        (3, "der the"),
+        (4, ""),
+        (5, None),
+        (6, "  DIE...  Straße,  für  "),
+    ]
+    df = spark.createDataFrame(rows, "id long, text string")
+    got = dict(df.select("id", lang_id(F.col("text")).alias("l")).collect())
+    assert got == {1: "de", 2: "en", 3: "und", 4: "und", 5: "und", 6: "de"}
+
+
+def _write_embeddings(path, vec_ids):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(vec_ids, pa.int64()),
+                "embedding": pa.array(
+                    [[float(i), 1.0] for i in range(len(vec_ids))],
+                    pa.list_(pa.float32()),
+                ),
+                "label": pa.array([0] * len(vec_ids), pa.int32()),
+            }
+        ),
+        path,
+        row_group_size=2,
+    )
+
+
+def _probe_vec(spark, sf_dir):
+    row = Q._t(spark, sf_dir, "embeddings").orderBy("vec_id").first()
+    return [float(x) for x in row["embedding"]]
+
+
+def test_query_vec_fast_path_only_when_footers_prove_it(spark, tmp_path):
+    """The fixtures take the pyarrow path, and it equals the Spark probe.
+    A table with a NULL vec_id (which sorts first in Spark and is skipped by
+    pyarrow's min) and a multi-file table both run the probe."""
+    for sf in (SF, "/root/testdata/sf0.01"):
+        fast = Q._query_vec_from_footers(f"{sf}/embeddings.parquet")
+        assert fast is not None
+        assert fast == Q._query_vec(spark, sf) == _probe_vec(spark, sf)
+
+    nulls = tmp_path / "nulls"
+    nulls.mkdir()
+    _write_embeddings(nulls / "embeddings.parquet", [7, 5, 9, None, 6])
+    assert Q._query_vec_from_footers(str(nulls / "embeddings.parquet")) is None
+    assert Q._query_vec(spark, str(nulls)) == _probe_vec(spark, str(nulls)) == [3.0, 1.0]
+
+    multi = tmp_path / "multi" / "embeddings.parquet"
+    multi.mkdir(parents=True)
+    _write_embeddings(multi / "part-0.parquet", [7, 5])
+    _write_embeddings(multi / "part-1.parquet", [9, 3])
+    assert Q._query_vec(spark, str(tmp_path / "multi")) == [1.0, 1.0]
