@@ -368,10 +368,10 @@ def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is BY DESIGN and irrelevant to the oracle: both engines compute the
     same approximate result, which is what the hash check certifies."""
     from commoncrawlnewsdataset_spark.operators.similarity import lsh_topk
+    from commoncrawlnewsdataset_spark.plans.queries import _query_vec
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    row = emb.orderBy("vec_id").select("embedding").first()
-    qv = [float(x) for x in row["embedding"]]
+    qv = _query_vec(spark, sf_dir)
     return lsh_topk(emb, qv, k=20, n_planes=LSH_ANN_PLANES,
                     probe_hamming=LSH_ANN_HAMMING)
 
@@ -429,10 +429,10 @@ def q_multi_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit, ORs the same T Hamming-ball predicates, and rescores the
     identical candidate union."""
     from commoncrawlnewsdataset_spark.operators.similarity import lsh_multi_table_topk
+    from commoncrawlnewsdataset_spark.plans.queries import _query_vec
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    row = emb.orderBy("vec_id").select("embedding").first()
-    qv = [float(x) for x in row["embedding"]]
+    qv = _query_vec(spark, sf_dir)
     return lsh_multi_table_topk(
         emb, qv, k=20, n_tables=MULTI_LSH_TABLES, probe_hamming=LSH_ANN_HAMMING
     )
@@ -514,11 +514,10 @@ def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_probe_read,
         nearest_lists,
     )
+    from commoncrawlnewsdataset_spark.plans.queries import _query_vec
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     rows_path, cents = ensure_shared_ivf(spark, sf_dir, n_lists=8)
-    row = emb.orderBy("vec_id").select("embedding").first()
-    qv = [float(x) for x in row["embedding"]]
+    qv = _query_vec(spark, sf_dir)
     probe = nearest_lists(qv, cents, IVF_ANN_N_PROBE)
     aux = pa.table(
         {
@@ -611,14 +610,13 @@ def q_composed_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from commoncrawlnewsdataset_spark.operators.pq import adc_lut
     from commoncrawlnewsdataset_spark.operators.similarity import nearest_lists
+    from commoncrawlnewsdataset_spark.plans.queries import _query_vec
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # shared per-dataset cache with a source signature — no tempdir leaked
     # per run (ADVICE r5), and the save/load round trip is still exercised
     ix = ensure_shared_index(spark, sf_dir)
     ix = AnnIndex.load(spark, ix.path)
-    row = emb.orderBy("vec_id").select("embedding").first()
-    qv = [float(x) for x in row["embedding"]]
+    qv = _query_vec(spark, sf_dir)
     n_probe = 6
     probe = nearest_lists(qv, ix.meta["centroids"], n_probe)
     qr = list(np.asarray(ix.meta["rotation"]) @ np.asarray(qv, dtype=float))
@@ -725,6 +723,7 @@ def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig_hash,
     )
     from commoncrawlnewsdataset_spark.operators.pq import pq_encode, pq_topk, pq_train
+    from commoncrawlnewsdataset_spark.plans.queries import _query_vec
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     sig_row = emb.agg(
@@ -735,8 +734,7 @@ def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     books = pq_train(emb, m=PQ_M, k=PQ_K, n_iter=2, dim=PQ_DIM)
     codes = pq_encode(emb, books)
-    row = emb.orderBy("vec_id").select("embedding").first()
-    qv = [float(x) for x in row["embedding"]]
+    qv = _query_vec(spark, sf_dir)
 
     base = os.path.join(cache_root(), "pqbooks")
     os.makedirs(base, exist_ok=True)
@@ -920,12 +918,12 @@ def q_opq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from commoncrawlnewsdataset_spark.operators.opq import opq_train, rotate
     from commoncrawlnewsdataset_spark.operators.pq import pq_encode, pq_topk
+    from commoncrawlnewsdataset_spark.plans.queries import _query_vec
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     R, books = opq_train(emb, m=8, k=16, n_iter=3, sample_size=1000)
     codes = pq_encode(rotate(emb, R), books)
-    row = emb.orderBy("vec_id").select("embedding").first()
-    qv = np.asarray([float(x) for x in row["embedding"]], dtype=np.float64)
+    qv = np.asarray(_query_vec(spark, sf_dir), dtype=np.float64)
     return pq_topk(codes, [float(x) for x in (R @ qv)], books, k=20)
 
 

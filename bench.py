@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+on the session's default parallelism (session.resolve_parallelism:
+$SPARK_GRAFT_CPUS, else the usable cores) and prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 The headline metric is the BASELINE.json target: frontier URLs
@@ -53,7 +54,6 @@ def _wait_for_quiet(threshold: float = 2.0, max_wait_s: int = 180) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     waited_s = _wait_for_quiet()
 
@@ -62,8 +62,7 @@ def main() -> None:
     from commoncrawlnewsdataset_spark.session import get_spark
 
     load_start = _loadavg()
-    spark = get_spark("ccnews-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus))
+    spark = get_spark("ccnews-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     headline = [
@@ -156,7 +155,7 @@ def main() -> None:
                     "n_urls": wave["n_urls"],
                     "n_scheduled": wave["n_scheduled"],
                     "n_fetched": wave["n_fetched"],
-                    "cpus": int(cpus),
+                    "cpus": spark.sparkContext.defaultParallelism,
                     "wave_samples_s": [round(w["elapsed_s"], 3) for w in samples],
                     # ADVICE r5: tag the sampling protocol so cross-round
                     # rows stay apples-to-apples (r1-r4 were single-shot)

@@ -39,9 +39,8 @@ def _crawl(args) -> None:
         # --pages: persist fetched payloads per wave (single fetch pass);
         # the extraction pipeline then reads <pages>/wave=*.parquet
         page_sink_dir=args.pages,
-        # --bucket-state N: checkpoints written as url-bucketed tables +
-        # persisted bloom shards; post-compaction waves join the frontier
-        # side Exchange-free (the 100-TB layout; see BENCH/BUCKETED.md)
+        # --bucket-state N: bucket count of the url-bucketed checkpoints;
+        # post-compaction waves join the frontier side Exchange-free
         bucket_state=args.bucket_state,
     )
     if args.seeds:
@@ -50,9 +49,9 @@ def _crawl(args) -> None:
         else:
             runner.load_seeds(spark.read.parquet(args.seeds))
     # --compact-every: without a cadence the wave log grows unbounded and
-    # (in bucket_state mode) the Exchange-free gate never engages — the
-    # soak-proven default is a checkpoint every 5 waves + delta expiry
-    # (BENCH/SOAK10M_BUCKETED.md); 0 disables both
+    # the Exchange-free gate never engages — the soak-proven default is a
+    # checkpoint every 5 waves + delta expiry (BENCH/SOAK10M_BUCKETED.md);
+    # 0 disables both
     for manifest in runner.run(
         max_waves=args.waves,
         compact_every=args.compact_every or None,
@@ -140,19 +139,8 @@ def _maintain(args) -> None:
     from commoncrawlnewsdataset_spark.frontier.waves import WaveRunner
     from commoncrawlnewsdataset_spark.session import get_spark
 
-    # Default: MATCH the layout the state dir already has (ADVICE r6) —
-    # read the latest checkpoint's bucket_meta.json; plain if absent.  A
-    # maintain pass must never silently convert a deliberately-plain dir
-    # to bucketed (or vice versa); conversion requires an explicit
-    # --bucket-state N / --bucket-state 0.
-    bucket_state = args.bucket_state
-    if bucket_state is None:
-        probe = WaveRunner(None, args.state)
-        ckpts = probe.committed_checkpoints()
-        bucket_state = (probe._ckpt_bucket_count(ckpts[-1]) or 0) if ckpts else 0
-
     spark = get_spark("ccnews-maintain")
-    runner = WaveRunner(spark, args.state, bucket_state=bucket_state or None)
+    runner = WaveRunner(spark, args.state, bucket_state=args.bucket_state)
     last = runner.last_wave()
     if last < 0:
         print(json.dumps({"error": "no committed waves in state dir"}))
@@ -179,6 +167,8 @@ def _bench(args) -> None:
 
 
 def main(argv: list[str] | None = None) -> None:
+    from commoncrawlnewsdataset_spark.frontier.waves import WaveRunner
+
     p = argparse.ArgumentParser(prog="ccnews-spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -190,11 +180,10 @@ def main(argv: list[str] | None = None) -> None:
     c.add_argument("--budget", type=int, default=10)
     c.add_argument("--nsalt", type=int, default=8)
     c.add_argument("--wave-seconds", type=float, default=None)
-    c.add_argument("--bucket-state", type=int, default=64,
-                   help="bucket count for url-bucketed state checkpoints "
+    c.add_argument("--bucket-state", type=int, default=WaveRunner.bucket_state,
+                   help="bucket count for the url-bucketed state checkpoints "
                         "(Exchange-free frontier joins after compaction; "
-                        "the 100-TB default — pass 0 for plain parquet "
-                        "checkpoints)")
+                        "default %(default)s)")
     c.add_argument("--pages", default=None,
                    help="page-sink dir: persist fetched html per wave")
     c.add_argument("--compact-every", type=int, default=5,
@@ -226,12 +215,10 @@ def main(argv: list[str] | None = None) -> None:
     m.add_argument("--state", required=True)
     m.add_argument("--expire", action="store_true",
                    help="also drop raw deltas covered by the checkpoint")
-    m.add_argument("--bucket-state", type=int, default=None,
-                   help="bucket count for the rewritten checkpoint.  "
-                        "Default: match the state dir's existing layout "
-                        "(latest checkpoint's bucket_meta.json; plain if "
-                        "none) — converting a layout requires passing this "
-                        "explicitly (N to bucket, 0 for plain)")
+    m.add_argument("--bucket-state", type=int, default=WaveRunner.bucket_state,
+                   help="bucket count for a new checkpoint (default "
+                        "%(default)s); a wave already checkpointed keeps "
+                        "its layout")
     m.set_defaults(fn=_maintain)
 
     pr = sub.add_parser("progress")

@@ -1683,12 +1683,7 @@ def q_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from commoncrawlnewsdataset_spark.operators.quantize import pack_binary_bytes
 
     emb = _t(spark, sf_dir, "embeddings")
-    qrow = (
-        emb.orderBy("vec_id")
-        .select(pack_binary_bytes(F.col("embedding")).alias("qb"))
-        .first()
-    )
-    qb = F.array(*[F.lit(int(b)) for b in qrow["qb"]])
+    qb = pack_binary_bytes(F.array(*[F.lit(x) for x in _query_vec(spark, sf_dir)]))
     packed = pack_binary_bytes(F.col("embedding"))
     hamming = F.aggregate(
         F.zip_with(packed, qb, lambda a, b: F.bit_count(a.bitwiseXOR(b))),
@@ -1755,12 +1750,9 @@ def q_composed_ann_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         search_composed_with_metadata,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    row = emb.orderBy("vec_id").select("embedding").first()
-    qv = [float(x) for x in row["embedding"]]
     docs = _t(spark, sf_dir, "documents")
     return search_composed_with_metadata(
-        spark, sf_dir, qv, docs, id_col="doc_id",
+        spark, sf_dir, _query_vec(spark, sf_dir), docs, id_col="doc_id",
         cols=("source", "lang", "n_chars"), k=10, n_probe=COMPOSED_N_PROBE,
         shortlist=100,
     )

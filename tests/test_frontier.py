@@ -470,6 +470,24 @@ def test_page_sink_feeds_extraction_spine(spark, tmp_path):
     assert n_pages + failed == m["n_selected"]
 
 
+def test_pages_reads_committed_waves_only(spark, tmp_path):
+    """pages() reads the sink files of committed waves only: a sink file
+    left by a wave that crashed before its manifest is not listed."""
+    import shutil
+
+    runner = WaveRunner(
+        spark, str(tmp_path / "ps"), per_host_budget=20, nsalt=2,
+        use_robots=False, page_sink_dir=str(tmp_path / "pages"),
+    )
+    urls = [f"https://h{i % 2}.example.org/art/{i:02d}" for i in range(16)]
+    runner.load_seeds(_parity_seeds(spark, urls))
+    m = runner.run_wave()
+    # wave 2 crashed after its sink write, before its manifest
+    shutil.copytree(runner._page_sink_path(1), runner._page_sink_path(2))
+    assert runner.committed_waves() == [0, 1]
+    assert runner.pages().count() == m["n_fetched"] > 0
+
+
 def test_expire_snapshots_keeps_state_and_lineage(spark, tmp_path):
     """Iceberg expire_snapshots analog: raw deltas covered by a checkpoint
     can be dropped — resolved state unchanged, manifests (lineage) kept,
@@ -1078,44 +1096,6 @@ def test_cli_maintain_compacts_and_preserves_resume(spark, tmp_path, capsys):
     assert "error" in err
 
 
-def test_cli_maintain_matches_existing_layout(spark, tmp_path, capsys):
-    """ADVICE r6: maintain's default bucket layout MATCHES the state dir —
-    a deliberately-plain dir stays plain (no silent bucketed conversion),
-    an explicit --bucket-state converts, and the next default maintain then
-    detects and keeps the converted layout."""
-    import os
-
-    from commoncrawlnewsdataset_spark import cli
-
-    st = str(tmp_path / "st")
-    runner = WaveRunner(
-        spark, st, per_host_budget=10, nsalt=2,
-        use_robots=False, fetcher=lambda u, r: (True, 1, 10),
-    )
-    urls = [f"https://h{i % 2}.example.org/p/{i}" for i in range(20)]
-    runner.load_seeds(_parity_seeds(spark, urls))
-    runner.run_wave()
-
-    cli.main(["maintain", "--state", st])
-    capsys.readouterr()
-    ck = sorted(d for d in os.listdir(st) if d.startswith("checkpoint="))
-    assert ck and not os.path.exists(os.path.join(st, ck[-1], "bucket_meta.json"))
-
-    cli.main(["maintain", "--state", st, "--bucket-state", "4"])
-    capsys.readouterr()
-    meta = os.path.join(st, ck[-1], "bucket_meta.json")
-    assert os.path.exists(meta)
-
-    runner.run_wave()
-    cli.main(["maintain", "--state", st])  # default now detects bucketed=4
-    capsys.readouterr()
-    import json as js
-
-    ck2 = sorted(d for d in os.listdir(st) if d.startswith("checkpoint="))
-    with open(os.path.join(st, ck2[-1], "bucket_meta.json")) as f:
-        assert js.load(f)["n_buckets"] == 4
-
-
 def _bucketed_runner(spark, path, bucket_state):
     from pyspark.sql import functions as F2
 
@@ -1134,20 +1114,22 @@ def _bucketed_runner(spark, path, bucket_state):
 
 
 def test_bucketed_state_parity_and_resume(spark, tmp_path):
-    """VERDICT r4 #4: bucket_state mode is a pure layout change — wave-by-
-    wave manifests and the final resolved state are identical to the plain
-    runner (same seeds, same discovery), across a compact() in the middle;
-    and after the catalog entry is lost (new-session analog) state() still
-    resolves by re-registering the bucketed table from the files."""
+    """VERDICT r4 #4: the bucketed checkpoint is a pure layout change —
+    wave-by-wave manifests and the final resolved state are identical to
+    an uncompacted twin that resolves from its deltas alone (same seeds,
+    same discovery), across a compact() in the middle; and after the
+    catalog entry is lost (new-session analog) state() still resolves by
+    re-registering the bucketed table from the files."""
     urls = [f"https://b{i % 4}.example.org/p/{i}" for i in range(40)]
 
-    plain = _bucketed_runner(spark, str(tmp_path / "plain"), None)
+    twin = _bucketed_runner(spark, str(tmp_path / "twin"), 8)
     buck = _bucketed_runner(spark, str(tmp_path / "buck"), 8)
-    for r in (plain, buck):
+    for r in (twin, buck):
         r.load_seeds(_parity_seeds(spark, urls))
         r.run_wave()
         r.run_wave()
-        r.compact()
+        if r is buck:
+            r.compact()
         r.run_wave()
 
     def snap(r):
@@ -1156,9 +1138,9 @@ def test_bucketed_state_parity_and_resume(spark, tmp_path):
             for x in r.state().collect()
         )
 
-    assert snap(plain) == snap(buck)
+    assert snap(twin) == snap(buck)
     for w in range(1, 4):
-        mp, mb = plain.read_manifest(w), buck.read_manifest(w)
+        mp, mb = twin.read_manifest(w), buck.read_manifest(w)
         for k in ("n_selected", "n_fetched", "n_failed", "n_discovered"):
             assert mp.get(k) == mb.get(k), (w, k)
 
@@ -1172,7 +1154,7 @@ def test_bucketed_state_parity_and_resume(spark, tmp_path):
     # catalog-loss resume: drop the table, a fresh read re-registers it
     tbl = buck._ckpt_table_name(buck.committed_checkpoints()[-1], 8)
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    assert snap(buck) == snap(plain)
+    assert snap(buck) == snap(twin)
     assert spark.catalog.tableExists(tbl)  # re-registered from files
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
@@ -1248,8 +1230,9 @@ def test_bucketed_state_gate_joins_exchange_free(spark, tmp_path):
 def test_bucketed_state_bucket_count_is_persisted(spark, tmp_path):
     """r5 review regression: the checkpoint's bucket count is recorded at
     write time and used on re-register — a runner restarted with a
-    DIFFERENT bucket_state (or with bucketing newly enabled over plain
-    checkpoints) must not register the files under the wrong layout."""
+    DIFFERENT bucket_state must not register the files under the wrong
+    layout, and re-compacting the same wave under it is a no-op.  A
+    legacy checkpoint without bucket_meta.json reads as plain parquet."""
     import dataclasses
     import json
     import os
@@ -1260,8 +1243,8 @@ def test_bucketed_state_bucket_count_is_persisted(spark, tmp_path):
     buck.run_wave()
     buck.compact()
     ckpt = buck.committed_checkpoints()[-1]
-    meta = json.load(open(os.path.join(buck._checkpoint_dir(ckpt), "bucket_meta.json")))
-    assert meta == {"n_buckets": 8}
+    meta_path = os.path.join(buck._checkpoint_dir(ckpt), "bucket_meta.json")
+    assert json.load(open(meta_path)) == {"n_buckets": 8}
 
     # restart with bucket_state=64: reads must use the FILES' count (8)
     spark.sql(f"DROP TABLE IF EXISTS {buck._ckpt_table_name(ckpt, 8)}")
@@ -1271,17 +1254,33 @@ def test_bucketed_state_bucket_count_is_persisted(spark, tmp_path):
     assert snap == want  # layout metadata never changes the data
     assert spark.catalog.tableExists(resumed._ckpt_table_name(ckpt, 8))
     assert not spark.catalog.tableExists(resumed._ckpt_table_name(ckpt, 64))
-    spark.sql(f"DROP TABLE IF EXISTS {buck._ckpt_table_name(ckpt, 8)}")
 
-    # bucketing enabled over a PLAIN state dir: no meta -> plain read, no
-    # bogus registration
-    plain = _bucketed_runner(spark, str(tmp_path / "pl"), None)
-    plain.load_seeds(_parity_seeds(spark, urls))
-    plain.run_wave()
-    plain.compact()
-    upgraded = dataclasses.replace(plain, bucket_state=16)
-    assert upgraded._ckpt_bucket_count(plain.committed_checkpoints()[-1]) is None
-    assert upgraded.state().count() == plain.state().count()
+    # re-compacting the checkpointed wave under 64 buckets is a no-op:
+    # files, meta and the registered count all stay at 8
+    success = os.path.join(buck._checkpoint_dir(ckpt), "state.parquet", "_SUCCESS")
+    mtime = os.path.getmtime(success)
+    assert resumed.compact(ckpt) == ckpt
+    assert os.path.getmtime(success) == mtime
+    assert json.load(open(meta_path)) == {"n_buckets": 8}
+    assert sorted((r["url"], r["status"]) for r in resumed.state().collect()) == want
+    assert not spark.catalog.tableExists(resumed._ckpt_table_name(ckpt, 64))
+
+    # legacy checkpoint (written plain, no bucket_meta.json): state() reads
+    # the files as plain parquet and registers nothing
+    spark.sql(f"DROP TABLE IF EXISTS {buck._ckpt_table_name(ckpt, 8)}")
+    os.remove(meta_path)
+    assert resumed._ckpt_bucket_count(ckpt) is None
+    assert sorted((r["url"], r["status"]) for r in resumed.state().collect()) == want
+    assert not spark.catalog.tableExists(resumed._ckpt_table_name(ckpt, 8))
+
+
+def test_bucket_state_rejects_plain_layout(tmp_path):
+    """Every checkpoint is url-bucketed: no bucket count means no runner."""
+    import pytest as _pytest
+
+    for bad in (None, 0, -4):
+        with _pytest.raises(ValueError, match="bucket_state"):
+            WaveRunner(None, str(tmp_path / "s"), bucket_state=bad)
 
 
 def test_compact_drops_superseded_catalog_tables(spark, tmp_path):
@@ -1363,7 +1362,7 @@ def test_run_loop_compaction_cadence_matches_manual(spark, tmp_path):
     import os as _os
 
     urls = [f"https://c{i % 4}.example.org/p/{i}" for i in range(48)]
-    plain = _bucketed_runner(spark, str(tmp_path / "plain"), None)
+    plain = _bucketed_runner(spark, str(tmp_path / "plain"), 8)
     auto = _bucketed_runner(spark, str(tmp_path / "auto"), 8)
     plain.load_seeds(_parity_seeds(spark, urls))
     auto.load_seeds(_parity_seeds(spark, urls))

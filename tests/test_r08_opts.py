@@ -5,7 +5,6 @@ Every r8 optimization is a plan change that must NOT change results:
 - the first wave after a seed load skips the URL-seen gate,
 - the post-compaction delta broadcast hints are size-gated (hint-on ≡
   hint-off, and an unprovable bound drops the hint),
-- compact()'s in-place layout conversion swap is crash-recoverable,
 - with_sql_text_stats computes each split array once (same values),
 - the quality_metrics_udf ASCII guard rides the lazy plan.
 """
@@ -60,21 +59,40 @@ def test_snapshot_single_delta_no_window(spark, tmp_path):
     assert st_all.groupBy("url").count().filter("count > 1").count() == 0
 
 
-def test_first_wave_skips_urlseen_gate_equivalently(spark, tmp_path):
+@pytest.mark.parametrize("bucket_state", [WaveRunner.bucket_state, 4])
+def test_first_wave_skips_urlseen_gate_equivalently(
+    spark, tmp_path, monkeypatch, bucket_state
+):
     """Wave 1 after load_seeds with assume_no_fetched on (the run_wave
-    default now) must select exactly what the gated path selects."""
+    default now) must select exactly what the gated path selects, and the
+    selection run_wave plans holds no URL-seen gate whatever the bucket
+    count."""
     runner = WaveRunner(spark, str(tmp_path / "s"), per_host_budget=5,
                         use_robots=False, fetcher=simulated_fetch,
-                        detailed_metrics=False)
+                        detailed_metrics=False, bucket_state=bucket_state)
     runner.load_seeds(_seed_df(spark))
     state = runner.state()
     fast = runner.select_wave(state, assume_no_fetched=True)
     slow = runner.select_wave(state, assume_no_fetched=False)
     cols = ("url", "rank")
     assert _rows(fast, cols) == _rows(slow, cols)
-    # and run_wave (which engages the fast path itself) commits the same
-    # selection as the gated selection computed above
+
+    def has_gate(df):
+        return "LeftAnti" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert has_gate(slow) and not has_gate(fast)
+    # run_wave engages the fast path itself: its selection holds no gate
+    # and commits the same selection as the gated one computed above
+    planned = []
+    select_wave = runner.select_wave
+
+    def spy(*args, **kwargs):
+        planned.append(select_wave(*args, **kwargs))
+        return planned[-1]
+
+    monkeypatch.setattr(runner, "select_wave", spy)
     manifest = runner.run_wave()
+    assert len(planned) == 1 and not has_gate(planned[0])
     assert manifest["n_selected"] == len(_rows(slow, ("url",)))
 
 
@@ -126,42 +144,6 @@ def test_broadcast_gate_unprovable_bound_drops_hint(spark, tmp_path):
     assert forked._delta_rows_bound([0]) is None      # forked_from manifest
     st = forked.state()
     assert st.groupBy("url").count().filter("count > 1").count() == 0
-
-
-def test_compact_swap_crash_recovery(spark, tmp_path):
-    """A crash between the two swap renames leaves state.parquet.old; the
-    next read recovers it (ADVICE r7).  A stray .rewrite is left to
-    compact(), which discards it: reads have no side effects on it."""
-    import shutil
-
-    runner = _mk_compacted_runner(spark, tmp_path)
-    ckpt = runner.committed_checkpoints()[-1]
-    out = runner._checkpoint_dir(ckpt)
-    state_path = os.path.join(out, "state.parquet")
-    before = _rows(runner.state(upto_wave=ckpt))
-    # simulate the torn swap: old moved aside, new never arrived
-    os.rename(state_path, state_path + ".old")
-    assert not os.path.isdir(state_path)
-    runner._recover_checkpoint_swap(ckpt)
-    assert os.path.isdir(state_path)
-    assert _rows(runner.state(upto_wave=ckpt)) == before
-    # a stray .rewrite next to an intact state.parquet survives a read (it
-    # may be another process's conversion in flight) ...
-    os.makedirs(state_path + ".rewrite", exist_ok=True)
-    runner._recover_checkpoint_swap(ckpt)
-    assert os.path.isdir(state_path + ".rewrite")
-    # and the read path runs recovery implicitly
-    os.rename(state_path, state_path + ".old")
-    assert _rows(runner.state(upto_wave=ckpt)) == before
-    assert os.path.isdir(state_path + ".rewrite")
-    # ... and the next compact() layout conversion discards it before it
-    # stages its own
-    import dataclasses
-
-    dataclasses.replace(runner, bucket_state=None).compact(ckpt)
-    assert not os.path.isdir(state_path + ".rewrite")
-    assert _rows(runner.state(upto_wave=ckpt)) == before
-    shutil.rmtree(str(tmp_path / "s"), ignore_errors=True)
 
 
 def test_delta_rows_bound_from_manifests(spark, tmp_path):

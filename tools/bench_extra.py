@@ -36,9 +36,7 @@ EXTRA = ["quality_metrics_udf", "minhash_lsh_capped", "minhash_lsh_xxhash"]
 def _session():
     from commoncrawlnewsdataset_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("ccnews-bench-extra", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus))
+    spark = get_spark("ccnews-bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 

@@ -6,14 +6,13 @@ BENCH/ODELTA.md's single datapoint.  Writes BENCH/SOAK.md.
 
 Usage: python tools/soak_bench.py [n_urls] [n_hosts] [budget] [compact_every] [max_waves] [out_md] [bucket_state] [head_factor]
 
-``bucket_state`` > 0 runs the frontier in url-bucketed checkpoint mode
-(VERDICT r5 #4) — compaction writes a bucketed+sorted table, the per-wave
-URL-seen gate joins Exchange-free against it and builds the bloom
-incrementally.  Every run records a per-wave SHUFFLE WRITE column (Spark UI
-REST, cumulative deltas) so plain vs bucketed shuffle mass is directly
-comparable wave by wave.
+``bucket_state`` (default ``WaveRunner.bucket_state``) is the bucket count
+of the url-bucketed checkpoints (VERDICT r5 #4) — compaction writes a
+bucketed+sorted table, the per-wave URL-seen gate joins Exchange-free
+against it and builds the bloom incrementally.  Every run records a
+per-wave SHUFFLE WRITE column (Spark UI REST, cumulative deltas).
 
-``head_factor`` (default 8; bucketed mode only) sizes the per-host
+``head_factor`` (default 8) sizes the per-host
 candidate head persisted at compaction (VERDICT r6 #3): post-compaction
 waves rank head ∪ deltas instead of the full pending set.  0 disables —
 the A/B against the full O(pending) selection (BENCH/HEAD.md).
@@ -36,13 +35,14 @@ def main() -> None:
     compact_every = int(sys.argv[4]) if len(sys.argv) > 4 else 5
     max_waves = int(sys.argv[5]) if len(sys.argv) > 5 else 50
     out_md = sys.argv[6] if len(sys.argv) > 6 else "BENCH/SOAK.md"
-    bucket_state = int(sys.argv[7]) if len(sys.argv) > 7 else 0
     head_factor = int(sys.argv[8]) if len(sys.argv) > 8 else 8
 
     from pyspark.sql import functions as F
 
     from commoncrawlnewsdataset_spark.frontier.waves import WaveRunner
     from commoncrawlnewsdataset_spark.session import get_spark
+
+    bucket_state = int(sys.argv[7]) if len(sys.argv) > 7 else WaveRunner.bucket_state
 
     spark = get_spark(
         "soak-bench",
@@ -92,7 +92,7 @@ def main() -> None:
     runner = WaveRunner(
         spark, state_dir, per_host_budget=budget, nsalt=8,
         use_robots=False, detailed_metrics=False,
-        bucket_state=bucket_state or None,
+        bucket_state=bucket_state,
         head_factor=head_factor,
     )
     t0 = time.time()
@@ -139,8 +139,8 @@ def main() -> None:
         f.write(
             f"# {max_waves}-wave compaction soak — {n_urls:,} urls, {n_hosts:,} hosts, "
             f"budget {budget}, compact_every={compact_every} + expire_snapshots"
-            f"{f', bucket_state={bucket_state}' if bucket_state else ''}"
-            f"{f', head_factor={head_factor}' if bucket_state and head_factor else ', head OFF'}\n\n"
+            f", bucket_state={bucket_state}"
+            f"{f', head_factor={head_factor}' if head_factor else ', head OFF'}\n\n"
             f"Seed load: {seed_s:.1f}s.  Total: {total_fetched:,} urls attempted "
             f"over {len(work)} working waves, {total_s:.1f}s "
             f"({total_fetched/total_s:,.0f} urls/s sustained, local[32]).\n\n"
