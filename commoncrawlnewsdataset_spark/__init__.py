@@ -22,7 +22,6 @@ Layout
 - ``frontier``   URL frontier: canonicalize+hash URL-seen (bloom + exact
                  anti-join), per-host politeness window, robots gating, wave
                  loop with checkpoint/resume and per-partition metrics.
-- ``streaming``  Structured Streaming ingest over the pages table.
 """
 
 __version__ = "0.1.0"

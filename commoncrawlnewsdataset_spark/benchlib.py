@@ -74,7 +74,7 @@ def frontier_wave_bench(
     try:
         runner = WaveRunner(
             spark, tmp, per_host_budget=per_host_budget, nsalt=8,
-            use_bloom=True, use_robots=False, detailed_metrics=False,
+            use_robots=False, detailed_metrics=False,
             fetcher=make_costed_fetcher(fetch_work_us),
         )
         t_load0 = time.time()

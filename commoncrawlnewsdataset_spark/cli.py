@@ -11,7 +11,6 @@ Subcommands:
     maintain  compact the frontier state + optionally expire covered deltas
     pipeline  run the extraction pipeline (03→08) pages -> star schema
     embed     embedding + quantization stage (09)
-    bench     the headline benchmark (same as bench.py)
 """
 
 from __future__ import annotations
@@ -154,18 +153,6 @@ def _maintain(args) -> None:
     }))
 
 
-def _bench(args) -> None:
-    from commoncrawlnewsdataset_spark.benchlib import frontier_wave_bench
-    from commoncrawlnewsdataset_spark.session import get_spark
-
-    spark = get_spark("ccnews-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    out = frontier_wave_bench(
-        spark, n_urls=args.n_urls, fetch_work_us=args.fetch_work_us
-    )
-    print(json.dumps(out))
-
-
 def main(argv: list[str] | None = None) -> None:
     from commoncrawlnewsdataset_spark.frontier.waves import WaveRunner
 
@@ -224,11 +211,6 @@ def main(argv: list[str] | None = None) -> None:
     pr = sub.add_parser("progress")
     pr.add_argument("--state", required=True)
     pr.set_defaults(fn=_progress)
-
-    b = sub.add_parser("bench")
-    b.add_argument("--n-urls", type=int, default=400_000)
-    b.add_argument("--fetch-work-us", type=float, default=100.0)
-    b.set_defaults(fn=_bench)
 
     args = p.parse_args(argv)
     args.fn(args)

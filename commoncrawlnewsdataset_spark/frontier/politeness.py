@@ -113,8 +113,8 @@ def politeness_debt_batch(
     batch_seconds: float = 60.0,
     default_delay: float = 1.0,
 ) -> DataFrame:
-    """Batch twin of streaming.ingest.politeness_debt — the SAME per-host
-    crawl-delay debt recurrence
+    """Per-host crawl-delay debt carried across a batch sequence — the
+    recurrence
 
         allowed_i = floor((batch_seconds + carry_{i-1}) / delay)
         granted_i = min(n_i, allowed_i)
@@ -127,8 +127,7 @@ def politeness_debt_batch(
     per-key parallelism Spark gives for free).  No Python, no iteration:
     two shuffles total for any number of batches.  The DuckDB oracle
     mirrors the fold with list_reduce, value-checking the debt arithmetic
-    cross-engine; the streaming operator is separately proven ≡ this
-    recurrence by the stream-vs-replay test."""
+    cross-engine."""
     B = float(batch_seconds)
     if crawl_delays:
         m = F.create_map(

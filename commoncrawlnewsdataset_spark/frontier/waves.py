@@ -175,7 +175,6 @@ class WaveRunner:
     state_dir: str
     per_host_budget: int = 10
     nsalt: int = 8
-    use_bloom: bool = True
     use_robots: bool = True
     max_retries: int = 5
     fetcher: Callable[[str, int], tuple[bool, int, int]] | None = None
@@ -603,8 +602,7 @@ class WaveRunner:
         # current config matches (r5 review finding)
         with open(os.path.join(out, "bucket_meta.json"), "w") as f:
             json.dump({"n_buckets": self.bucket_state}, f)
-        if self.use_bloom:
-            self._write_ckpt_bloom(upto, state_path)
+        self._write_ckpt_bloom(upto, state_path)
         if self.head_factor:
             self._write_ckpt_head(upto, state_path)
         # metadata hygiene: older checkpoints' catalog entries are now
@@ -710,8 +708,8 @@ class WaveRunner:
 
     def _ckpt_bloom(self, upto: int | None):
         """(shards_df, meta) for a committed checkpoint's persisted bloom,
-        or None when absent or disabled."""
-        if upto is None or not self.use_bloom:
+        or None when absent."""
+        if upto is None:
             return None
         out = self._checkpoint_dir(upto)
         meta_path = os.path.join(out, "bloom_meta.json")
@@ -847,7 +845,7 @@ class WaveRunner:
             unseen = self._filter_unseen_split(pending, parts)
         else:
             fetched = state.filter(F.col("status") == "fetched").select("url")
-            unseen = filter_unseen(pending, fetched, use_bloom=self.use_bloom)
+            unseen = filter_unseen(pending, fetched)
         return politeness_rank(unseen, self.per_host_budget, self.nsalt, host_budgets)
 
     def _crawl_delay_budgets(self) -> DataFrame | None:
@@ -892,7 +890,6 @@ class WaveRunner:
             pending,
             big_seen,
             small_seen,
-            use_bloom=self.use_bloom,
             num_shards=bloom[1]["num_shards"] if bloom else 16,
             big_shards=bloom[0] if bloom else None,
             m_bits_per_shard=bloom[1]["m_bits_per_shard"] if bloom else None,

@@ -512,74 +512,23 @@ def dedup_against_store(
     fingerprints only (16 bytes/doc); when it outgrows a direct anti-join,
     the bloom front (frontier.core.filter_unseen) slots in unchanged —
     same key shape, same no-false-negative contract."""
-    kept = dedup_batch_against_fps(new_docs, fingerprint_log(new_docs.sparkSession, store_dir), id_col, text_col)
-    append_fingerprints(kept, store_dir)
-    return kept.drop("_fp")
-
-
-def fingerprint_log(spark, store_dir: str, epochs: set[int] | None = None) -> DataFrame | None:
-    """The store's fingerprint DataFrame (column ``fp``), or None if empty.
-    With ``epochs`` set, only fingerprints stamped with one of those epoch
-    ids are returned (rows logged before epoch stamping existed — no
-    ``epoch`` column — are always kept: they predate the caller's run)."""
     import os
 
-    log = os.path.join(store_dir, "fingerprints.parquet")
-    if not os.path.isdir(log):
-        return None
-    # mergeSchema: pre-epoch logs and epoch-stamped appends can share a dir
-    fps = spark.read.option("mergeSchema", "true").parquet(log)
-    if epochs is not None and "epoch" in fps.columns:
-        # broadcast semi-join, not isin: a long-lived stream accumulates an
-        # unbounded committed-epoch set and a literal IN list doesn't scale
-        nulls = fps.filter(F.col("epoch").isNull())
-        if epochs:
-            edf = spark.createDataFrame([(int(e),) for e in sorted(epochs)], "epoch long")
-            stamped = fps.filter(F.col("epoch").isNotNull()).join(
-                F.broadcast(edf), "epoch", "left_semi"
-            )
-            fps = nulls.unionByName(stamped)
-        else:
-            fps = nulls
-    return fps.select("fp")
-
-
-def dedup_batch_against_fps(
-    new_docs: DataFrame,
-    seen_fps: DataFrame | None,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """The dedup core WITHOUT the store append: anti-join the batch against
-    ``seen_fps`` (column ``fp``; None = nothing seen), keep the min-id
-    survivor per fingerprint within the batch, and return survivors WITH
-    the ``_fp`` column so the caller can commit fingerprints itself AFTER
-    its own sink write succeeds (ordering matters for effectively-once —
-    see stream_dedup_corpus_to).  localCheckpoint cuts the plan so the
-    caller's sink write + fingerprint append don't re-run the dedup."""
     from commoncrawlnewsdataset_spark.functions.quality import fingerprint_md5
 
-    with_fp = new_docs.withColumn("_fp", fingerprint_md5(F.col(text_col)))
-    if seen_fps is not None:
-        fresh = with_fp.join(seen_fps.select(F.col("fp").alias("_fp")), "_fp", "left_anti")
-    else:
-        fresh = with_fp
-    surv = fresh.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-    return fresh.join(surv, ["_fp", id_col], "left_semi").localCheckpoint()
-
-
-def append_fingerprints(kept: DataFrame, store_dir: str, epoch: int | None = None) -> None:
-    """Append the survivors' fingerprints (from ``_fp``) to the store log,
-    optionally stamped with the writing epoch so readers can gate on sink
-    commit (fingerprint_log(epochs=...))."""
-    import os
-
     log = os.path.join(store_dir, "fingerprints.parquet")
-    # epoch always written (null for batch appends) so every file in the log
-    # shares one schema; fingerprint_log reads with mergeSchema regardless
-    ep = F.lit(int(epoch)) if epoch is not None else F.lit(None)
-    fps = kept.select(F.col("_fp").alias("fp"), ep.cast("long").alias("epoch"))
-    fps.write.mode("append").parquet(log)
+    fresh = new_docs.withColumn("_fp", fingerprint_md5(F.col(text_col)))
+    if os.path.isdir(log):
+        # only ``fp`` is read: logs written by older versions also carry an
+        # ``epoch`` column, which no reader needs
+        seen = new_docs.sparkSession.read.parquet(log).select(F.col("fp").alias("_fp"))
+        fresh = fresh.join(seen, "_fp", "left_anti")
+    surv = fresh.groupBy("_fp").agg(F.min(id_col).alias(id_col))
+    # localCheckpoint cuts the plan: the append below and the caller both
+    # read the survivors without re-running the dedup
+    kept = fresh.join(surv, ["_fp", id_col], "left_semi").localCheckpoint()
+    kept.select(F.col("_fp").alias("fp")).write.mode("append").parquet(log)
+    return kept.drop("_fp")
 
 
 # ---------------------------------------------------------------------------

@@ -1681,9 +1681,12 @@ def q_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-index search (V4): Hamming distance over packed sign bytes to
     the min-vec_id query, top-20 (10_vector_database.py:19-23 metric)."""
     from commoncrawlnewsdataset_spark.operators.quantize import pack_binary_bytes
+    from commoncrawlnewsdataset_spark.operators.similarity import sign_words_of
 
     emb = _t(spark, sf_dir, "embeddings")
-    qb = pack_binary_bytes(F.array(*[F.lit(x) for x in _query_vec(spark, sf_dir)]))
+    # the query's bytes, packed once here: Spark does not constant-fold
+    # pack_binary_bytes over a literal array, so each row would re-pack it
+    qb = F.array(*[F.lit(w) for w in sign_words_of(_query_vec(spark, sf_dir), 8)])
     packed = pack_binary_bytes(F.col("embedding"))
     hamming = F.aggregate(
         F.zip_with(packed, qb, lambda a, b: F.bit_count(a.bitwiseXOR(b))),
@@ -2753,14 +2756,13 @@ DEBT_NBATCH = 4
 
 
 def q_politeness_debt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host crawl-delay debt over a batch sequence — the recurrence the
-    stateful streaming operator carries across micro-batches, folded
+    """Per-host crawl-delay debt over a batch sequence, folded
     JVM-side per host (one F.aggregate, two shuffles for ANY number of
     batches).  The request log derives from orders (host = customer host,
     batch = orderkey % 4); slow hosts (h0: 10s delay, h1: 5s vs 30s
     batches) accumulate real deferrals.  The oracle mirrors the fold with
     DuckDB list_reduce, so the green row value-checks the debt arithmetic
-    cross-engine; stream ≡ batch is separately pytest-proven."""
+    cross-engine."""
     from commoncrawlnewsdataset_spark.frontier.politeness import politeness_debt_batch
 
     orders = _t(spark, sf_dir, "orders")

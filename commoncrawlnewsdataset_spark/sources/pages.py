@@ -62,13 +62,6 @@ def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
     (F1, 02_extract_newscrawl.py:26), header projection P1 (02:27-33).
     Parsing is the from-scratch WARC/1.0 reader — pure Python inside an
     Arrow-batched mapInPandas, one shard per row of the binaryFile scan."""
-    binaries = spark.read.format("binaryFile").load(path_glob)
-    return parse_warc_blobs(binaries.select("content"))
-
-
-def parse_warc_blobs(blobs: DataFrame) -> DataFrame:
-    """mapInPandas WARC parse of a `content: binary` column (shared by the
-    file scan above and the streaming ingest)."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -77,7 +70,8 @@ def parse_warc_blobs(blobs: DataFrame) -> DataFrame:
                 rows.extend(_records_from_bytes(content))
             yield pd.DataFrame(rows, columns=[f.name for f in WARC_RECORDS_SCHEMA.fields])
 
-    return blobs.mapInPandas(parse, WARC_RECORDS_SCHEMA)
+    binaries = spark.read.format("binaryFile").load(path_glob)
+    return binaries.select("content").mapInPandas(parse, WARC_RECORDS_SCHEMA)
 
 
 def warc_records_to_pages(records: DataFrame) -> DataFrame:

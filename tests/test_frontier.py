@@ -707,7 +707,7 @@ def test_reprioritize_with_pagerank_scores(spark, tmp_path):
     urls = [(f"https://{h}.example.org/p/{i}", 0.5, dt.datetime(2024, 1, 1))
             for h in ("h0", "h1", "h2") for i in range(3)]
     runner = WaveRunner(spark, str(tmp_path / "pr"), per_host_budget=9, nsalt=2,
-                        use_robots=False, use_bloom=False)
+                        use_robots=False)
     runner.load_seeds(spark.createDataFrame(urls, SEEDS_SCHEMA))
 
     mapping = F.create_map(

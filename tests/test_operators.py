@@ -14,7 +14,11 @@ from commoncrawlnewsdataset_spark.operators.quantize import (
     quantize_binary_bits,
     quantize_int8,
 )
-from commoncrawlnewsdataset_spark.operators.similarity import brute_force_topk, lsh_topk
+from commoncrawlnewsdataset_spark.operators.similarity import (
+    brute_force_topk,
+    lsh_topk,
+    sign_words_of,
+)
 from commoncrawlnewsdataset_spark.operators.spatial import (
     coalesce_nuts,
     point_in_region_join,
@@ -89,6 +93,8 @@ def test_quantization_matches_numpy_formulas(spark):
         assert got[i][0] == expected_q[i].tolist(), i
         assert got[i][1] == expected_bits[i].tolist(), i
         assert got[i][2] == expected_bytes[i].tolist(), i
+        # the driver-side packing q_hamming_topk applies to its query vector
+        assert sign_words_of(vecs[i], 8) == np.packbits(vecs[i] > 0).tolist(), i
 
 
 def test_brute_force_vs_numpy_topk(spark):
@@ -186,45 +192,6 @@ def test_ivf_written_index_partition_prunes(spark, tmp_path):
     a = [(r["vec_id"], r["score"]) for r in probed.collect()]
     b = [(r["vec_id"], r["score"]) for r in ivf_topk(df, q, cents, k=5, n_probe=2).collect()]
     assert a == b
-
-
-def test_salted_agg_equals_plain(spark):
-    from commoncrawlnewsdataset_spark.operators.skew import salted_agg
-
-    # one hot key (90% of rows) + long tail
-    df = spark.range(10_000).select(
-        F.when(F.col("id") % 10 < 9, "hot").otherwise(F.concat(F.lit("k"), (F.col("id") % 97).cast("string"))).alias("key"),
-        (F.col("id") % 1000).cast("double").alias("v"),
-    )
-    got = {
-        r["key"]: (r["count"], r["sum_v"], r["min_v"], r["max_v"])
-        for r in salted_agg(df, ["key"], {"*": "count", "v": "sum"}, nsalt=8).join(
-            salted_agg(df, ["key"], {"v": "min"}, nsalt=8), "key"
-        ).join(salted_agg(df, ["key"], {"v": "max"}, nsalt=8), "key").collect()
-    }
-    want = {
-        r["key"]: (r["count"], r["sum_v"], r["min_v"], r["max_v"])
-        for r in df.groupBy("key").agg(
-            F.count("*").alias("count"), F.sum("v").alias("sum_v"),
-            F.min("v").alias("min_v"), F.max("v").alias("max_v"),
-        ).collect()
-    }
-    assert got == want
-
-
-def test_salted_hot_key_join_equals_plain(spark):
-    from commoncrawlnewsdataset_spark.operators.skew import salted_hot_key_join
-
-    facts = spark.range(5_000).select(
-        F.when(F.col("id") % 5 < 4, 1).otherwise((F.col("id") % 50).cast("int")).alias("k"),
-        F.col("id").alias("fid"),
-    )
-    dim = spark.range(50).select(F.col("id").cast("int").alias("k"), F.concat(F.lit("d"), F.col("id").cast("string")).alias("label"))
-    got = sorted(
-        (r["fid"], r["label"]) for r in salted_hot_key_join(facts, dim, "k", nsalt=4).collect()
-    )
-    want = sorted((r["fid"], r["label"]) for r in facts.join(dim, "k").collect())
-    assert got == want
 
 
 def test_kmeans_refine_improves_assignment(spark):
@@ -670,6 +637,46 @@ def test_dedup_store_persists_across_batches(spark, tmp_path):
     b3 = dedup_against_store(batch([(20, "gamma"), (21, "delta"), (22, "epsilon")]),
                              store, "id", "text")
     assert {r["id"] for r in b3.collect()} == {22}
+
+
+def test_dedup_store_reads_logs_with_epoch_column(spark, tmp_path):
+    """A fingerprint log written by an older version stamps each row with a
+    nullable ``epoch``; appends now write ``fp`` alone.  With both layouts
+    in one log, every logged fingerprint still drops its duplicate."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from commoncrawlnewsdataset_spark.functions.quality import fingerprint_md5
+    from commoncrawlnewsdataset_spark.operators.dedup import dedup_against_store
+
+    store = str(tmp_path / "store")
+    log = os.path.join(store, "fingerprints.parquet")
+    os.makedirs(log)
+    fps = [r["fp"] for r in spark.createDataFrame(
+        [("alpha",), ("beta",)], "t string"
+    ).select(fingerprint_md5(F.col("t")).alias("fp")).collect()]
+    # one file on either side of the new appends in name order, one
+    # epoch-stamped row and one null-epoch (batch) row, as older versions
+    # wrote them
+    for name, fp, epoch in (("0-legacy.parquet", fps[0], 3), ("z-legacy.parquet", fps[1], None)):
+        pq.write_table(
+            pa.table({"fp": pa.array([fp], pa.string()),
+                      "epoch": pa.array([epoch], pa.int64())}),
+            os.path.join(log, name),
+        )
+
+    def batch(rows):
+        return spark.createDataFrame(rows, ["id", "text"])
+
+    b1 = dedup_against_store(batch([(1, "alpha"), (2, "gamma")]), store, "id", "text")
+    assert {r["id"] for r in b1.collect()} == {2}
+    b2 = dedup_against_store(
+        batch([(10, "ALPHA"), (11, "beta"), (12, "gamma"), (13, "delta")]),
+        store, "id", "text",
+    )
+    assert {r["id"] for r in b2.collect()} == {13}
 
 
 def test_ivf_append_incremental_index(spark, tmp_path):

@@ -1,11 +1,10 @@
-"""End-to-end pipeline + star schema + streaming tests."""
+"""End-to-end pipeline + star schema tests."""
 
 from __future__ import annotations
 
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from commoncrawlnewsdataset_spark.plans.pipeline import run_pipeline
 from commoncrawlnewsdataset_spark.plans.star import merge_upsert
@@ -79,367 +78,10 @@ def test_merge_upsert_semantics(spark):
     assert ignored == {1: "old", 2: "keep", 3: "ins"}  # INSERT OR IGNORE
 
 
-def test_streaming_extract_matches_batch(spark, tmp_path):
-    from commoncrawlnewsdataset_spark.functions.extract import extract_articles
-    from commoncrawlnewsdataset_spark.sources.pages import write_pages
-    from commoncrawlnewsdataset_spark.streaming.ingest import (
-        stream_extract_to,
-        stream_pages,
-    )
-
-    pages = spark.createDataFrame(make_pages_pdf(200, seed=4), PAGES_SCHEMA)
-    src = str(tmp_path / "pages")
-    write_pages(pages, src, mode="overwrite")
-
-    stream = stream_pages(spark, src, max_files_per_trigger=2)
-    q = stream_extract_to(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    streamed = spark.read.parquet(str(tmp_path / "out"))
-    # dedup keeps an arbitrary representative per (text, hostname) group, so
-    # compare the dedup KEYS: streaming (per-batch dedup) covers every key the
-    # global batch dedup produced
-    batch_keys = {
-        (r["text"], r["hostname"])
-        for r in extract_articles(pages).select("text", "hostname").collect()
-    }
-    streamed_keys = {
-        (r["text"], r["hostname"]) for r in streamed.select("text", "hostname").collect()
-    }
-    assert batch_keys <= streamed_keys
-    assert streamed.filter(F.col("text").isNull()).count() == 0
-
-
-def test_stateful_host_counts(spark, tmp_path):
-    """applyInPandasWithState: per-host totals accumulate across micro-batches
-    and converge to the batch ground truth."""
-    from commoncrawlnewsdataset_spark.functions.urls import host_of
-    from commoncrawlnewsdataset_spark.sources.pages import write_pages
-    from commoncrawlnewsdataset_spark.streaming.ingest import (
-        stateful_host_counts,
-        stream_pages,
-    )
-
-    pages = spark.createDataFrame(make_pages_pdf(150, seed=6), PAGES_SCHEMA)
-    src = str(tmp_path / "spages")
-    write_pages(pages, src, mode="overwrite")
-
-    stream = stream_pages(spark, src, max_files_per_trigger=1)
-    q = (
-        stateful_host_counts(stream)
-        .writeStream.format("memory")
-        .queryName("host_counts")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    # last update per host == total batch count per host
-    from pyspark.sql import Window as W
-
-    updates = spark.sql("select * from host_counts")
-    latest = (
-        updates.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("host").orderBy(F.desc("batches_seen"), F.desc("n_pages_total"))
-            ),
-        )
-        .filter("rn = 1")
-        .select("host", "n_pages_total")
-    )
-    got = {r["host"]: r["n_pages_total"] for r in latest.collect()}
-    expected = {
-        r["host"]: r["n"]
-        for r in pages.select(host_of(F.col("url")).alias("host"))
-        .groupBy("host")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert got == expected
-
-
-def test_stream_warc_ingest(spark, tmp_path):
-    """Streaming S4: raw WARC shards dropped in a dir flow through the
-    from-scratch parser into the pages shape; only response records surface,
-    and a second availableNow run picks up ONLY newly added shards
-    (checkpoint replaces the reference's destructive delete, 02:58-60)."""
-    from commoncrawlnewsdataset_spark.sources.warc import (
-        build_request_record,
-        build_response_record,
-        build_warcinfo,
-    )
-    from commoncrawlnewsdataset_spark.streaming.ingest import stream_warc_pages
-
-    date = "2024-05-01T00:00:00Z"
-
-    def shard(i: int) -> bytes:
-        return (
-            build_warcinfo(date, gzip_member=True)
-            + build_request_record(f"https://s.example/{i}", date, f"<urn:uuid:rq{i}>", gzip_member=True)
-            + build_response_record(
-                f"https://s.example/{i}", date, f"<urn:uuid:{i}>",
-                f"<html><p>body {i}</p></html>".encode(), gzip_member=True,
-            )
-        )
-
-    src = tmp_path / "warcs"
-    src.mkdir()
-    sink = str(tmp_path / "pages")
-    ckpt = str(tmp_path / "ckpt")
-    (src / "a.warc.gz").write_bytes(shard(1))
-    (src / "b.warc.gz").write_bytes(shard(2))
-
-    def drain():
-        q = (
-            stream_warc_pages(spark, str(src), max_files_per_trigger=1)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    got = spark.read.parquet(sink)
-    urls = sorted(r["url"] for r in got.select("url").collect())
-    assert urls == ["https://s.example/1", "https://s.example/2"]
-    assert got.columns == ["url", "warc_ts", "html", "text", "lang"]
-
-    # incremental: a new shard appears; only it is processed next run
-    (src / "c.warc.gz").write_bytes(shard(3))
-    drain()
-    urls = sorted(r["url"] for r in spark.read.parquet(sink).select("url").collect())
-    assert urls == [f"https://s.example/{i}" for i in (1, 2, 3)]
-
-
-def test_politeness_debt_stream_equals_batch_replay(spark, tmp_path):
-    """VERDICT r2 #6: per-host crawl-delay debt carried across micro-batches
-    (applyInPandasWithState) must equal a plain batch replay of the same
-    recurrence over the same batch sequence — banked credit raises a later
-    batch's allowance, over-demand defers and carries forward."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commoncrawlnewsdataset_spark.streaming.ingest import (
-        politeness_debt,
-        stream_pages,
-    )
-
-    BATCH_S = 30.0
-    DELAYS = {"h0.example.org": 10.0}  # h1 falls through to default 1.0
-    batches = [
-        {"h0.example.org": 5, "h1.example.org": 10},
-        {"h0.example.org": 1, "h1.example.org": 40},
-        {"h0.example.org": 2},
-        {"h0.example.org": 7, "h1.example.org": 5},
-    ]
-
-    src = str(tmp_path / "req")
-    os.makedirs(src)
-    arrow_schema = pa.schema(
-        [
-            ("url", pa.string()),
-            ("warc_ts", pa.timestamp("us")),
-            ("html", pa.binary()),
-            ("text", pa.string()),
-            ("lang", pa.string()),
-        ]
-    )
-    t0 = 1_700_000_000
-    for i, counts in enumerate(batches):
-        urls = [
-            f"https://{host}/b{i}/u{j}"
-            for host, n in counts.items()
-            for j in range(n)
-        ]
-        tbl = pa.table(
-            {
-                "url": urls,
-                "warc_ts": pa.array([0] * len(urls), pa.timestamp("us")),
-                "html": pa.array([None] * len(urls), pa.binary()),
-                "text": pa.array([None] * len(urls), pa.string()),
-                "lang": pa.array([None] * len(urls), pa.string()),
-            },
-            schema=arrow_schema,
-        )
-        path = os.path.join(src, f"b{i}.parquet")
-        pq.write_table(tbl, path)
-        os.utime(path, (t0 + i, t0 + i))  # deterministic batch order
-
-    q = (
-        politeness_debt(
-            stream_pages(spark, src, max_files_per_trigger=1),
-            DELAYS,
-            batch_seconds=BATCH_S,
-            default_delay=1.0,
-        )
-        .writeStream.format("memory")
-        .queryName("debt")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "dckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    from pyspark.sql import Window as W
-
-    updates = spark.sql("select * from debt")
-    latest = (
-        updates.withColumn(
-            "rn", F.row_number().over(W.partitionBy("host").orderBy(F.desc("batches_seen")))
-        )
-        .filter("rn = 1")
-        .collect()
-    )
-    got = {
-        r["host"]: (r["n_requested"], r["n_granted"], r["n_deferred"],
-                    r["carry_s"], r["batches_seen"])
-        for r in latest
-    }
-
-    def replay(host):
-        delay = DELAYS.get(host, 1.0)
-        carry, req, gr, seen = 0.0, 0, 0, 0
-        for counts in batches:
-            n = counts.get(host, 0)
-            if n == 0:
-                continue  # state updates only on batches where the host appears
-            allowed = int((BATCH_S + carry) // delay)
-            g = min(n, allowed)
-            carry = min(BATCH_S, BATCH_S + carry - g * delay)
-            req += n
-            gr += g
-            seen += 1
-        return req, gr, req - gr, carry, seen
-
-    assert got == {h: replay(h) for h in ("h0.example.org", "h1.example.org")}
-    # sanity: the debt dynamics actually bit — h0 deferred work AND banked
-    # credit raised a later allowance above floor(batch/delay)
-    assert got["h0.example.org"][2] > 0
-    per_batch_base = int(BATCH_S // DELAYS["h0.example.org"])
-    assert got["h0.example.org"][1] > per_batch_base * 3  # credit was spent
-
-
-def test_stream_dedup_corpus_across_batches(spark, tmp_path):
-    """Streaming incremental corpus: content duplicated ACROSS micro-batches
-    is dropped by the persistent fingerprint store, within-batch dups by the
-    extraction spine's D1 dedup — effectively-once corpus rows."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commoncrawlnewsdataset_spark.streaming.ingest import (
-        stream_dedup_corpus_to,
-        stream_pages,
-    )
-
-    def page(url, body):
-        html = f"<html><body><p>{body}</p></body></html>".encode()
-        return (url, 0, html, None, None)
-
-    batches = [
-        [page("https://h.example/u1", "alpha body"),
-         page("https://h.example/u2", "alpha body"),      # in-batch dup
-         page("https://h.example/u3", "beta body")],
-        [page("https://h.example/u4", "alpha body"),      # cross-batch dup
-         page("https://h.example/u5", "gamma body")],
-    ]
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    schema = pa.schema([("url", pa.string()), ("warc_ts", pa.timestamp("us")),
-                        ("html", pa.binary()), ("text", pa.string()),
-                        ("lang", pa.string())])
-    for i, rows in enumerate(batches):
-        tbl = pa.table(
-            {k: pa.array(v, schema.field(k).type)
-             for k, v in zip(schema.names, map(list, zip(*rows)))},
-            schema=schema,
-        )
-        path = os.path.join(src, f"b{i}.parquet")
-        pq.write_table(tbl, path)
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    q = stream_dedup_corpus_to(
-        stream_pages(spark, src, max_files_per_trigger=1),
-        str(tmp_path / "store"), str(tmp_path / "sink"), str(tmp_path / "ck"),
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(str(tmp_path / "sink")).select("url", "text").collect()
-    got = {(r["url"], r["text"]) for r in rows}
-    assert got == {
-        ("https://h.example/u1", "alpha body"),
-        ("https://h.example/u3", "beta body"),
-        ("https://h.example/u5", "gamma body"),
-    }
-
-
-def test_sessionize_stream_equals_batch(spark, tmp_path):
-    """Streaming gap-sessionization (stateful, O(users) state) over
-    chronological micro-batches converges to the batch window sessionizer's
-    exact per-user answer on the same events."""
-    import os
-
-    from commoncrawlnewsdataset_spark.plans.queries import q_sessionize
-    from commoncrawlnewsdataset_spark.streaming.ingest import sessionize_stream
-
-    sf = "/root/testdata/sf0.001"
-    events = spark.read.parquet(f"{sf}/events.parquet")
-    mid = events.approxQuantile("event_id", [0.5], 0.0)[0]
-    src = str(tmp_path / "ev")
-    os.makedirs(src)
-    # two chronological batches (events table is ts-ordered by event_id)
-    for i, part in enumerate([events.filter(F.col("event_id") <= mid),
-                              events.filter(F.col("event_id") > mid)]):
-        part.coalesce(1).write.parquet(str(tmp_path / f"tmp{i}"))
-        f = [x for x in os.listdir(str(tmp_path / f"tmp{i}")) if x.endswith(".parquet")][0]
-        os.rename(str(tmp_path / f"tmp{i}" / f), os.path.join(src, f"b{i}.parquet"))
-        os.utime(os.path.join(src, f"b{i}.parquet"),
-                 (1_700_000_000 + i, 1_700_000_000 + i))
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sess")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "sck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    from pyspark.sql import Window as W
-
-    latest = (
-        spark.sql("select * from sess")
-        .withColumn("rn", F.row_number().over(
-            W.partitionBy("user_id").orderBy(F.desc("n_sessions"),
-                                             F.desc("max_session_events"))))
-        .filter("rn = 1")
-    )
-    got = {(r["user_id"], r["n_sessions"], r["max_session_events"])
-           for r in latest.collect()}
-    want = {(r["user_id"], r["n_sessions"], r["max_session_events"])
-            for r in q_sessionize(spark, sf).collect()}
-    assert got == want and len(want) == 15
-
-
 def test_sessionize_breaks_on_fractional_second_gaps(spark, tmp_path):
     """A gap of 1800.5 s (or 1800 s + 1 us) breaks a session and a gap of
-    exactly 1800 s does not — in the batch window sessionizer, its
-    streaming twin and the DuckDB oracle alike."""
+    exactly 1800 s does not — in the batch window sessionizer and the
+    DuckDB oracle alike."""
     import os
 
     import duckdb
@@ -450,7 +92,6 @@ def test_sessionize_breaks_on_fractional_second_gaps(spark, tmp_path):
         ORACLE_SESSIONIZE,
         q_sessionize,
     )
-    from commoncrawlnewsdataset_spark.streaming.ingest import sessionize_stream
 
     t0 = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC, in microseconds
     gaps_us = {1: 1_800_500_000, 2: 1_800_000_000, 3: 1_800_000_001}
@@ -466,85 +107,11 @@ def test_sessionize_breaks_on_fractional_second_gaps(spark, tmp_path):
 
     batch = {tuple(r) for r in q_sessionize(spark, sf).collect()}
 
-    events = spark.read.parquet(f"{sf}/events.parquet")
-    stream = spark.readStream.schema(events.schema).parquet(f"{sf}/events.parquet")
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sess_fractional")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "sck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = {tuple(r) for r in spark.sql("select * from sess_fractional").collect()}
-
     con = duckdb.connect()
     con.sql(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'")
     oracle = {tuple(r) for r in con.sql(ORACLE_SESSIONIZE).fetchall()}
     con.close()
-    assert batch == streamed == oracle == want
-
-
-def test_stream_dedup_retry_after_failed_sink_is_not_at_most_once(spark, tmp_path):
-    """ADVICE r3 (medium): fingerprints appended by a FAILED micro-batch
-    attempt (sink write never committed) must not suppress those documents
-    on retry.  Simulated by pre-poisoning the store with epoch-0-stamped
-    fingerprints for every document while the sink has no committed
-    epoch=0 — exactly the on-disk state a crash between fingerprint append
-    and sink write used to leave.  The replay (epoch 0 again) must still
-    deliver the documents."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commoncrawlnewsdataset_spark.streaming.ingest import (
-        stream_dedup_corpus_to,
-        stream_pages,
-    )
-
-    bodies = {"https://h.example/u1": "alpha body", "https://h.example/u2": "beta body"}
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    schema = pa.schema([("url", pa.string()), ("warc_ts", pa.timestamp("us")),
-                        ("html", pa.binary()), ("text", pa.string()),
-                        ("lang", pa.string())])
-    rows = [(u, 0, f"<html><body><p>{b}</p></body></html>".encode(), None, None)
-            for u, b in bodies.items()]
-    tbl = pa.table({k: pa.array(v, schema.field(k).type)
-                    for k, v in zip(schema.names, map(list, zip(*rows)))},
-                   schema=schema)
-    pq.write_table(tbl, os.path.join(src, "b0.parquet"))
-
-    # poison: the failed attempt's fingerprint append (epoch 0, no sink
-    # commit) — fingerprints computed with the REAL fingerprint function so
-    # they match what the retry's anti-join would see
-    from commoncrawlnewsdataset_spark.functions.quality import fingerprint_md5
-
-    store = str(tmp_path / "store")
-    fps = [r["fp"] for r in
-           spark.createDataFrame([(b,) for b in bodies.values()], "t string")
-           .select(fingerprint_md5(F.col("t")).alias("fp")).collect()]
-    log_dir = os.path.join(store, "fingerprints.parquet")
-    os.makedirs(log_dir)
-    pq.write_table(
-        pa.table({"fp": pa.array(fps, pa.string()),
-                  "epoch": pa.array([0] * len(fps), pa.int64())}),
-        os.path.join(log_dir, "part-poison.parquet"),
-    )
-
-    q = stream_dedup_corpus_to(
-        stream_pages(spark, src, max_files_per_trigger=1),
-        store, str(tmp_path / "sink"), str(tmp_path / "ck"),
-    )
-    q.awaitTermination(120)
-    got = {(r["url"], r["text"]) for r in
-           spark.read.parquet(str(tmp_path / "sink")).select("url", "text").collect()}
-    assert got == {(u, b) for u, b in bodies.items()}, (
-        "documents lost: uncommitted-epoch fingerprints suppressed the retry"
-    )
+    assert batch == oracle == want
 
 
 def test_spark_submit_pyfiles_ships_the_engine(tmp_path):
@@ -598,173 +165,3 @@ def test_spark_submit_pyfiles_ships_the_engine(tmp_path):
     assert out.returncode == 0, out.stderr[-2000:]
     rows = [l for l in out.stdout.splitlines() if l.startswith("SUBMIT_ROWS=")]
     assert rows and int(rows[0].split("=")[1]) > 0
-
-
-def test_stream_dedup_stop_and_restart_resumes_epochs(spark, tmp_path):
-    """Integration: stop the dedup stream mid-source (one file per trigger,
-    processed-file limit), then RESTART with the same checkpoint — epoch
-    ids continue, already-committed epochs are not rewritten, and the final
-    corpus is complete and duplicate-free across the restart boundary."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commoncrawlnewsdataset_spark.streaming.ingest import (
-        stream_dedup_corpus_to,
-        stream_pages,
-    )
-
-    def page(url, body):
-        html = f"<html><body><p>{body}</p></body></html>".encode()
-        return (url, 0, html, None, None)
-
-    batches = [
-        [page("https://h.example/u1", "alpha body")],
-        [page("https://h.example/u2", "alpha body"),     # cross-run dup
-         page("https://h.example/u3", "beta body")],
-        [page("https://h.example/u4", "gamma body")],
-    ]
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    schema = pa.schema([("url", pa.string()), ("warc_ts", pa.timestamp("us")),
-                        ("html", pa.binary()), ("text", pa.string()),
-                        ("lang", pa.string())])
-
-    def write_batch(i, rows):
-        tbl = pa.table(
-            {k: pa.array(v, schema.field(k).type)
-             for k, v in zip(schema.names, map(list, zip(*rows)))},
-            schema=schema,
-        )
-        path = os.path.join(src, f"b{i}.parquet")
-        pq.write_table(tbl, path)
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    store, sink, ck = (str(tmp_path / d) for d in ("store", "sink", "ck"))
-
-    # RUN 1: only the first file exists; availableNow drains it and stops
-    write_batch(0, batches[0])
-    q1 = stream_dedup_corpus_to(stream_pages(spark, src, max_files_per_trigger=1),
-                                store, sink, ck)
-    q1.awaitTermination(120)
-    epochs_run1 = {d for d in os.listdir(sink) if d.startswith("epoch=")}
-    assert epochs_run1  # at least one committed epoch
-    mtimes = {d: os.path.getmtime(os.path.join(sink, d, "_SUCCESS"))
-              for d in epochs_run1}
-
-    # RUN 2: two more files appear; SAME checkpoint resumes the id sequence
-    write_batch(1, batches[1])
-    write_batch(2, batches[2])
-    time.sleep(1.1)  # mtime resolution guard for the rewrite check
-    q2 = stream_dedup_corpus_to(stream_pages(spark, src, max_files_per_trigger=1),
-                                store, sink, ck)
-    q2.awaitTermination(120)
-
-    epochs_run2 = {d for d in os.listdir(sink) if d.startswith("epoch=")}
-    assert epochs_run2 > epochs_run1  # new epochs appended, old ones kept
-    for d in epochs_run1:  # committed epochs were NOT rewritten on restart
-        assert os.path.getmtime(os.path.join(sink, d, "_SUCCESS")) == mtimes[d]
-
-    got = {(r["url"], r["text"]) for r in
-           spark.read.parquet(sink).select("url", "text").collect()}
-    assert got == {
-        ("https://h.example/u1", "alpha body"),   # run-1 content kept
-        ("https://h.example/u3", "beta body"),    # new content delivered
-        ("https://h.example/u4", "gamma body"),
-    }  # u2 deduped against run 1's fingerprints, across the restart
-
-
-def test_stream_dedup_mid_batch_kill_replays_identically(tmp_path):
-    """VERDICT r4 #5 — PROCESS-level fault injection in the exact window
-    the effectively-once protocol defends (streaming/ingest.py: between an
-    epoch's committed sink write and its fingerprint append): the driver
-    process is os._exit-killed there, then restarted on the same
-    checkpoint.  The replayed epoch must re-emit IDENTICAL rows (step 1 of
-    the protocol excludes the epoch's own/uncommitted fingerprints, so the
-    retry cannot drop the documents), committed earlier epochs stay
-    untouched, and cross-epoch dedup still holds."""
-    import os
-    import subprocess
-    import sys
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def page(url, body):
-        html = f"<html><body><p>{body}</p></body></html>".encode()
-        return (url, 0, html, None, None)
-
-    batches = [
-        [page("https://k.example/u1", "alpha body")],
-        [page("https://k.example/u2", "alpha body"),      # dup of epoch 0
-         page("https://k.example/u3", "beta body")],
-        [page("https://k.example/u4", "beta body"),       # dup of epoch 1
-         page("https://k.example/u5", "gamma body")],
-    ]
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    schema = pa.schema([("url", pa.string()), ("warc_ts", pa.timestamp("us")),
-                        ("html", pa.binary()), ("text", pa.string()),
-                        ("lang", pa.string())])
-    for i, rows in enumerate(batches):
-        tbl = pa.table(
-            {k: pa.array(v, schema.field(k).type)
-             for k, v in zip(schema.names, map(list, zip(*rows)))},
-            schema=schema,
-        )
-        path = os.path.join(src, f"b{i}.parquet")
-        pq.write_table(tbl, path)
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    store, sink, ck = (str(tmp_path / d) for d in ("store", "sink", "ck"))
-    driver = os.path.join(os.path.dirname(__file__), "stream_crash_driver.py")
-
-    # RUN 1: killed between epoch 1's sink commit and fingerprint append
-    env = dict(os.environ, CRASH_EPOCH="1")
-    out = subprocess.run(
-        [sys.executable, driver, src, store, sink, ck],
-        env=env, capture_output=True, text=True, timeout=420,
-    )
-    assert out.returncode == 42, (out.returncode, out.stderr[-2000:])
-    # crash-window state on disk: epoch 1 sink committed, fingerprints NOT
-    assert os.path.exists(os.path.join(sink, "epoch=1", "_SUCCESS"))
-    import duckdb
-
-    fps_epochs = duckdb.sql(
-        f"SELECT DISTINCT epoch FROM '{store}/fingerprints.parquet/*.parquet' ORDER BY epoch"
-    ).fetchall()
-    assert fps_epochs == [(0,)], fps_epochs
-    before = duckdb.sql(
-        f"SELECT url, text FROM '{sink}/epoch=1/*.parquet' ORDER BY url"
-    ).fetchall()
-    assert before, "epoch 1 sink committed but empty"
-
-    # RUN 2: same checkpoint — epoch 1 replays, then epoch 2 proceeds
-    env2 = dict(os.environ)
-    env2.pop("CRASH_EPOCH", None)
-    out2 = subprocess.run(
-        [sys.executable, driver, src, store, sink, ck],
-        env=env2, capture_output=True, text=True, timeout=420,
-    )
-    assert out2.returncode == 0, out2.stderr[-2000:]
-    assert "DRIVER_DONE" in out2.stdout
-
-    after = duckdb.sql(
-        f"SELECT url, text FROM '{sink}/epoch=1/*.parquet' ORDER BY url"
-    ).fetchall()
-    assert after == before  # the replayed epoch re-emitted identical rows
-    got = set(duckdb.sql(
-        f"SELECT url, text FROM '{sink}/epoch=*/*.parquet'"
-    ).fetchall())
-    assert got == {
-        ("https://k.example/u1", "alpha body"),
-        ("https://k.example/u3", "beta body"),    # survived the replay
-        ("https://k.example/u5", "gamma body"),   # u4 deduped vs replayed e1
-    }, got
-    # fingerprints now cover every committed epoch
-    fps_epochs = {e for (e,) in duckdb.sql(
-        f"SELECT DISTINCT epoch FROM '{store}/fingerprints.parquet/*.parquet'"
-    ).fetchall()}
-    assert {0, 1, 2} <= fps_epochs

@@ -94,59 +94,6 @@ def test_frontier_select_no_cartesian(spark, tmp_path):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_bucketed_join_avoids_shuffle(spark, tmp_path):
-    """Co-located join contract (the 100 TB repeat-join economics): two
-    tables bucketed+sorted on the join key with the same bucket count join
-    as a SortMergeJoin with NO Exchange and NO Sort on either side — the
-    shuffle is paid once at write time.  Also locks the negative: the same
-    join over plain parquet DOES exchange, so the assertion can't pass
-    vacuously."""
-    import contextlib
-    import io
-
-    from commoncrawlnewsdataset_spark.sources.bucketed import (
-        read_table,
-        write_bucketed_table,
-    )
-
-    # warehouse dir is a static conf; managed tables land in the session
-    # default and are dropped (with data) in the finally below
-    urls = spark.range(0, 5000).selectExpr(
-        "concat('https://h', id % 50, '.example.org/p/', id) AS url",
-        "id % 7 AS depth",
-    )
-    meta = spark.range(0, 5000).selectExpr(
-        "concat('https://h', id % 50, '.example.org/p/', id) AS url",
-        "id * 10 AS fetch_ms",
-    )
-    write_bucketed_table(urls, "t_frontier_b", "url", n_buckets=8)
-    write_bucketed_table(meta, "t_meta_b", "url", n_buckets=8)
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
-    try:
-        joined = read_table(spark, "t_frontier_b").join(
-            read_table(spark, "t_meta_b"), "url"
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join still shuffles:\n" + plan
-        assert joined.count() == 5000  # and it's the right join
-
-        plain = urls.join(meta, "url")
-        buf2 = io.StringIO()
-        with contextlib.redirect_stdout(buf2):
-            plain.explain("formatted")
-        assert "Exchange" in buf2.getvalue()  # negative control
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_frontier_b")
-        spark.sql("DROP TABLE IF EXISTS t_meta_b")
-
-
 def test_decontaminate_broadcasts_eval_side(spark):
     """The eval shingle set must broadcast (tiny vs corpus): the overlap
     join is a BroadcastHashJoin, never a SortMergeJoin shuffling exploded

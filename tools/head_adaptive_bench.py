@@ -63,7 +63,7 @@ def main() -> None:
     for name, hf in (("head", head_factor), ("full", 0)):
         tmp = tempfile.mkdtemp(prefix=f"headadpt-{name}-")
         runner = WaveRunner(
-            spark, tmp, per_host_budget=budget, nsalt=8, use_bloom=True,
+            spark, tmp, per_host_budget=budget, nsalt=8,
             use_robots=True, robots_rules=rules, wave_seconds=wave_seconds,
             detailed_metrics=False, fetcher=make_costed_fetcher(100.0),
             bucket_state=64, head_factor=hf,
