@@ -1,21 +1,27 @@
-"""Frontier core: canonical URL keys and the URL-seen filter.
+"""Frontier core: canonical URL keys and the URL-seen gate.
 
 URL-seen at 10^10 scale (north_star): a partitioned Bloom pre-filter plus an
-exact anti-join backstop.
+exact anti-join backstop, behind ONE function, ``url_seen_gate``, that every
+frontier path (wave selection, the candidate head, link discovery) calls.
 
 - Keys: murmur3 (Spark's built-in ``hash``) over the canonical URL
   (functions.urls.canonicalize_url).  All bloom bit positions are derived
   JVM-side as columns (seeded re-hashes), so the Python side only ever sees
   integer positions — no Python hashing of URLs.
-- Build: fetched keys -> `num_shards` shards by pmod(url_hash) -> one bitset
+- Seen set: split into a checkpoint part (the compacted frontier, a
+  url-bucketed scan that joins Exchange-free) and a recent part (the
+  deltas since it, broadcast only within ``broadcast_fits``).  Either part
+  may be absent; with both absent the gate is the identity.
+- Build: seen keys -> `num_shards` shards by pmod(url_hash) -> one bitset
   per shard built with applyInPandas (numpy bitwise, Arrow-batched).  Shard
   bitsets are small (m_bits/8 bytes each) and independent, so at 10^10 URLs
-  you scale shards out instead of one giant filter; the shard table is
-  broadcast to probe.
+  you scale shards out instead of one giant filter.  The checkpoint's
+  shards are persisted at compaction; a gate builds shards once, over the
+  parts no persisted shards cover, and ORs them in (merge_bloom_shards).
 - Probe: candidate urls compute the same positions, join their shard's bitset
   (broadcast hash join), test bits vectorized.  Possibly-seen survivors go to
-  the EXACT anti-join against the fetched set — bloom false positives can
-  therefore never drop a URL; the bloom only shrinks the anti-join's left
+  the EXACT anti-joins against the seen parts — bloom false positives can
+  therefore never drop a URL; the bloom only shrinks the anti-joins' left
   side (typically by ~99% for revisit-heavy frontiers).
 
 The reference's equivalent is `os.path.exists` per file
@@ -25,6 +31,8 @@ The reference's equivalent is `os.path.exists` per file
 from __future__ import annotations
 
 import math
+from functools import reduce
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -156,29 +164,6 @@ def bloom_probe(
     ).drop("_shard", "_words")
 
 
-def filter_unseen(
-    candidates: DataFrame,
-    fetched: DataFrame,
-    url_col: str = "url",
-    use_bloom: bool = True,
-    num_shards: int = 16,
-) -> DataFrame:
-    """D2 at scale: definitely-new rows skip the anti-join entirely; only
-    bloom-positive rows are checked exactly.  Output is provably identical to
-    a plain anti-join (bloom has no false negatives; positives are verified)."""
-    fetched_urls = fetched.select(url_col).distinct()
-    if not use_bloom or fetched_urls.isEmpty():
-        # first wave / empty seen-set: nothing to probe (anti-join on an
-        # empty right side is a no-op and the bloom build would be pure cost)
-        return candidates.join(fetched_urls, url_col, "left_anti")
-    shards = build_bloom_shards(fetched_urls, url_col, num_shards)
-    probed = bloom_probe(candidates, shards, url_col, num_shards)
-    definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    needs_check = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = needs_check.join(fetched_urls, url_col, "left_anti")
-    return definitely_new.unionByName(confirmed_new)
-
-
 def merge_bloom_shards(a: DataFrame, b: DataFrame) -> DataFrame:
     """Bitwise-OR two shard sets built with the SAME (num_shards, m_bits):
     bloom membership is monotone, so OR-ing word arrays is exact set union.
@@ -214,56 +199,83 @@ def merge_bloom_shards(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-def filter_unseen_split(
+def broadcast_fits(bound: int | None, limit: int) -> bool:
+    """The frontier's one broadcast rule for a recent (post-checkpoint) side:
+    hint the broadcast only when a row bound is known and at or below
+    ``limit``.  Past it, or with no provable bound, the join is left to AQE
+    — a shuffle join, never an oversized broadcast."""
+    return bound is not None and bound <= limit
+
+
+class Gated(NamedTuple):
+    """A gated frontier DataFrame, what the gate did (``record``, kept in
+    the wave manifest) and the DataFrames it cached (``cached``: the caller
+    unpersists them after the wave's last action)."""
+
+    df: DataFrame
+    record: dict
+    cached: list
+
+
+def url_seen_gate(
     candidates: DataFrame,
-    big_seen: DataFrame,
-    small_seen: DataFrame | None,
+    checkpoint_seen: DataFrame | None,
+    recent_seen: DataFrame | None,
+    *,
+    recent_bound: int | None = None,
+    broadcast_max: int = 0,
+    checkpoint_shards: tuple[DataFrame, dict] | None = None,
+    bloom: bool = True,
     url_col: str = "url",
-    use_bloom: bool = True,
-    num_shards: int = 16,
-    big_shards: DataFrame | None = None,
-    m_bits_per_shard: int | None = None,
-) -> DataFrame:
-    """The URL-seen gate with the seen set SPLIT into a big component (the
-    compacted frontier checkpoint — ideally a table bucketed on url) and a
-    small recent component (deltas since compaction, wave-bounded).
+) -> Gated:
+    """The one URL-seen gate: ``candidates`` minus every url of the seen
+    set, which comes SPLIT into a checkpoint part (the compacted frontier,
+    a url-bucketed scan) and a recent part (the deltas since it).  Either
+    part may be None; with both None the seen set is known empty and the
+    gate is the identity.
 
-    Scale shape vs plain filter_unseen(candidates, big ∪ small):
+    - The recent part is broadcast iff ``broadcast_fits(recent_bound,
+      broadcast_max)``.
+    - The checkpoint part joins as the scan itself: bucketed on url, its
+      SortMergeJoin side needs no Exchange and no Sort, so the only
+      shuffle is the candidate side.
+    - With ``bloom``, only bloom-positive candidates reach those exact
+      anti-joins.  The shards are ``checkpoint_shards`` (persisted at
+      compaction) OR-ed with ONE build over the parts they do not cover;
+      a built shard set is cached so both union branches read one build.
 
-    - the anti-join against the small component broadcasts it — no shuffle;
-    - the anti-join against the big component puts the ONLY Exchange on the
-      candidate side: when ``big_seen`` scans a bucketed+sorted table the
-      SortMergeJoin's right side needs no Exchange and no Sort (a plain
-      union-then-anti re-shuffles the FULL seen set — O(frontier) shuffle
-      bytes per wave, the 100-TB killer);
-    - with ``big_shards`` (bloom shards persisted at compaction) the bloom
-      build shuffles only the small component each wave, then ORs the two
-      shard sets (merge_bloom_shards) — the full-set bloom rebuild was the
-      other per-wave O(frontier) shuffle.
+    Output is identical to a plain anti-join against the union of the two
+    parts: the bloom has no false negatives, positives are re-checked
+    exactly, and X ANTI (A ∪ B) == (X ANTI A) ANTI B."""
+    if checkpoint_seen is None and recent_seen is None:
+        return Gated(candidates, {"skipped": True}, [])
+    big = checkpoint_seen.select(url_col) if checkpoint_seen is not None else None
+    small = recent_seen.select(url_col).distinct() if recent_seen is not None else None
+    broadcast = broadcast_fits(recent_bound, broadcast_max) if small is not None else None
+    small_side = F.broadcast(small) if broadcast else small
 
-    Output is provably identical to filter_unseen over the union: bloom has
-    no false negatives and positives are exactly re-checked; X ANTI (A ∪ B)
-    == (X ANTI A) ANTI B."""
-    big_urls = big_seen.select(url_col)
-    small_urls = small_seen.select(url_col).distinct() if small_seen is not None else None
+    def backstop(cands: DataFrame) -> DataFrame:
+        for seen in (small_side, big):
+            if seen is not None:
+                cands = cands.join(seen, url_col, "left_anti")
+        return cands
 
-    def _backstop(cands: DataFrame) -> DataFrame:
-        out = cands
-        if small_urls is not None:
-            out = out.join(F.broadcast(small_urls), url_col, "left_anti")
-        return out.join(big_urls, url_col, "left_anti")
-
-    if not use_bloom:
-        return _backstop(candidates)
-    shards = big_shards if big_shards is not None else build_bloom_shards(
-        big_urls, url_col, num_shards, m_bits_per_shard
-    )
-    if small_urls is not None:
-        shards = merge_bloom_shards(
-            shards,
-            build_bloom_shards(small_urls, url_col, num_shards, m_bits_per_shard),
+    record = {"skipped": False, "bloom": None, "broadcast": broadcast, "bound": recent_bound}
+    if not bloom:
+        return Gated(backstop(candidates), record, [])
+    persisted = checkpoint_shards if big is not None else None
+    shards, meta = persisted or (None, {"num_shards": 16, "m_bits_per_shard": None})
+    num_shards, m_bits = meta["num_shards"], meta["m_bits_per_shard"]
+    to_build = [p for p in (None if persisted else big, small) if p is not None]
+    cached = []
+    if to_build:
+        built = build_bloom_shards(
+            reduce(DataFrame.unionByName, to_build), url_col, num_shards, m_bits
         )
-    probed = bloom_probe(candidates, shards, url_col, num_shards, m_bits_per_shard)
+        shards = (built if shards is None else merge_bloom_shards(shards, built)).cache()
+        cached.append(shards)
+    record["bloom"] = "both" if persisted and to_build else "persisted" if persisted else "built"
+    probed = bloom_probe(candidates, shards, url_col, num_shards, m_bits)
     definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
     needs_check = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return definitely_new.unionByName(_backstop(needs_check))
+    return Gated(definitely_new.unionByName(backstop(needs_check)), record, cached)

@@ -36,6 +36,7 @@ import os
 import time
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -48,7 +49,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from commoncrawlnewsdataset_spark.frontier.core import filter_unseen, with_frontier_keys
+from commoncrawlnewsdataset_spark.frontier.core import (
+    Gated,
+    bloom_num_bits,
+    broadcast_fits,
+    build_bloom_shards,
+    url_seen_gate,
+    with_frontier_keys,
+)
 from commoncrawlnewsdataset_spark.frontier.politeness import politeness_rank
 from commoncrawlnewsdataset_spark.frontier.robots import gate_by_robots
 
@@ -169,6 +177,18 @@ def simulated_fetch_with_payload(
     return True, attempts, len(body), body
 
 
+class Snapshot(NamedTuple):
+    """One snapshot read, split for the per-wave joins; the bound and the
+    ``*_fetched`` flags come from the wave manifests alone (no job)."""
+
+    ckpt: DataFrame | None  # newest usable checkpoint scan
+    deltas: DataFrame | None  # latest record per url over the later deltas
+    ckpt_wave: int | None
+    delta_bound: int | None  # upper bound on delta rows; None = unprovable
+    ckpt_fetched: bool  # False: the manifests prove no fetched row in ckpt
+    deltas_fetched: bool  # False: ... no fetched row in the deltas
+
+
 @dataclass
 class WaveRunner:
     spark: SparkSession
@@ -216,15 +236,13 @@ class WaveRunner:
     # files were written with (bucket_meta.json), so a changed value takes
     # effect at the next compaction.
     bucket_state: int = 16
-    # VERDICT r7 #1 — size gate for the post-compaction delta broadcast
-    # hints (_compose_state url anti-join; head-path delta anti-join): the
-    # hint is applied only while the manifest-derived upper bound on delta
-    # rows stays at or below this.  Above it (a stretched compact_every, a
-    # link-discovery burst) the hint is DROPPED and AQE picks the join —
-    # degrading to a shuffle join instead of failing on an oversized
-    # broadcast.  4M url rows ≈ low-hundreds-MB broadcast (the 300M-soak
-    # operating point, proven safe); the bound costs no job — it is summed
-    # from the per-wave manifests at snapshot-read time.
+    # VERDICT r7 #1 — the one size gate (core.broadcast_fits) for every
+    # recent-side broadcast hint: the _compose_state and head-path delta
+    # anti-joins, the URL-seen backstop and the discovery gate.  Past the
+    # manifest-derived row bound (a stretched compact_every, a link
+    # burst) the hint is DROPPED and AQE picks a shuffle join instead of
+    # failing on an oversized broadcast.  4M url rows ≈ low-hundreds-MB
+    # broadcast (the 300M-soak operating point, proven safe).
     broadcast_delta_max: int = 4_000_000
     # VERDICT r6 #3 — wave-selection pruning: at each compaction, persist a
     # per-host candidate HEAD (the top head_factor×budget pending rows by
@@ -316,89 +334,74 @@ class WaveRunner:
         removes the covered deltas; expiration clamps its horizon to a
         committed checkpoint, so every SURVIVING wave always resolves from a
         checkpoint at-or-below it plus intact deltas."""
-        ckpt_df, resolved_deltas, _ = self._snapshot_parts(upto_wave)
-        return self._compose_state(ckpt_df, resolved_deltas)
+        return self._compose_state(self._snapshot_parts(upto_wave))
 
-    def _compose_state(
-        self, ckpt_df: DataFrame | None, resolved_deltas: DataFrame | None
-    ) -> DataFrame:
-        if ckpt_df is None:
-            if resolved_deltas is None:
+    def _compose_state(self, snap: Snapshot) -> DataFrame:
+        if snap.ckpt is None:
+            if snap.deltas is None:
                 raise ValueError(f"no committed waves in {self.state_dir}")
-            return resolved_deltas
-        if resolved_deltas is None:
-            return ckpt_df
+            return snap.deltas
+        if snap.deltas is None:
+            return snap.ckpt
         # A wave's delta is bounded by the politeness budget + link fan-out —
         # orders of magnitude smaller than a 10^10-url frontier — so the url
-        # set broadcasts and the checkpoint side stays Exchange-free.  The
-        # hint is SIZE-GATED (VERDICT r7 #1): _snapshot_parts records a
-        # manifest-derived upper bound on delta rows; past
-        # broadcast_delta_max (or when no bound is provable, e.g. a fork
-        # delta) the hint is dropped and AQE chooses — a stretched
-        # compact_every or link burst degrades to a shuffled anti-join
-        # instead of an oversized-broadcast failure.
-        untouched = ckpt_df.join(
-            self._maybe_broadcast(resolved_deltas.select("url")), "url", "left_anti"
+        # set broadcasts and the checkpoint side stays Exchange-free, within
+        # the one broadcast rule (a stretched compact_every or link burst
+        # degrades to a shuffled anti-join instead of an oversized
+        # broadcast).
+        untouched = snap.ckpt.join(
+            self._hinted(snap.deltas.select("url"), snap.delta_bound), "url", "left_anti"
         )
-        return untouched.unionByName(resolved_deltas.select(*untouched.columns))
+        return untouched.unionByName(snap.deltas.select(*untouched.columns))
 
-    def _maybe_broadcast(self, df: DataFrame) -> DataFrame:
-        """Apply the broadcast hint iff the newest snapshot read proved the
-        post-checkpoint delta row bound ≤ broadcast_delta_max."""
-        bound = getattr(self, "_last_delta_bound", None)
-        if bound is not None and bound <= self.broadcast_delta_max:
-            return F.broadcast(df)
-        return df
+    def _hinted(self, df: DataFrame, bound: int | None) -> DataFrame:
+        """``df`` with the broadcast hint iff core.broadcast_fits(bound)."""
+        return F.broadcast(df) if broadcast_fits(bound, self.broadcast_delta_max) else df
 
-    def _delta_rows_bound(self, waves: list[int]) -> int | None:
-        """Upper bound on resolved-delta rows computed from manifests ALONE
-        (no Spark job): a crawl wave's delta holds n_selected outcomes +
-        n_discovered fresh urls; maintenance waves record seeded /
-        requeued / reprioritized exactly.  Returns None (no provable
-        bound) for fork deltas — a fork's wave-0 delta is the full
-        resolved source state and its manifest records no row count."""
-        total = 0
+    def _manifest_bounds(self, waves: list[int]) -> tuple[int | None, int | None]:
+        """(rows, fetched): upper bounds on the resolved rows and on the
+        fetched rows of ``waves``' deltas, from their manifests ALONE (no
+        Spark job).  A crawl wave's delta holds n_selected outcomes (of
+        which n_fetched fetched) + n_discovered fresh urls; maintenance
+        waves record seeded / requeued / reprioritized exactly and fetch
+        nothing.  Both are None (no provable bound) for a fork delta — a
+        fork's wave-0 delta is the full resolved source state and its
+        manifest records no row count — or an unreadable manifest."""
+        rows = fetched = 0
         for w in waves:
             try:
                 m = self.read_manifest(w)
             except OSError:
-                return None
+                return None, None
             if "forked_from" in m:
-                return None
-            n = None
-            for k in ("seeded", "requeued", "reprioritized"):
-                if k in m:
-                    n = m[k]
-                    break
+                return None, None
+            n = next((m[k] for k in ("seeded", "requeued", "reprioritized") if k in m), None)
             if n is None and "n_selected" in m:
                 n = m.get("n_selected", 0) + m.get("n_discovered", 0)
             if n is None:
-                return None
-            total += int(n)
-        return total
+                return None, None
+            rows += int(n)
+            fetched += int(m.get("n_fetched", 0))
+        return rows, fetched
 
-    def _snapshot_parts(
-        self, upto_wave: int | None = None
-    ) -> tuple[DataFrame | None, DataFrame | None, int | None]:
-        """(checkpoint_df, resolved_deltas, ckpt_wave) — the components
-        state() composes.  Exposed separately because the per-wave gates
-        want them SPLIT: the checkpoint side is huge (a bucketed scan that
-        joins Exchange-free) while the delta side is wave-bounded and
-        broadcastable (filter_unseen_split)."""
+    def _snapshot_parts(self, upto_wave: int | None = None) -> Snapshot:
+        """The components state() composes, SPLIT for the per-wave gates:
+        the checkpoint side is huge (a bucketed scan that joins
+        Exchange-free), the delta side wave-bounded (core.url_seen_gate)."""
         waves = self.committed_waves()
         if upto_wave is not None:
             waves = [w for w in waves if w <= upto_wave]
         base = [c for c in self.committed_checkpoints() if not waves or c <= max(waves, default=-1)]
         ckpt_df = None
         ckpt = None
+        ckpt_fetched = False
         if base and (upto_wave is None or base[-1] <= upto_wave):
             ckpt = base[-1]
             ckpt_df = self._read_checkpoint(ckpt)
+            ckpt_fetched = self._manifest_bounds([w for w in waves if w <= ckpt])[1] != 0
             waves = [w for w in waves if w > ckpt]
         delta_paths = [os.path.join(self._wave_dir(w), "delta.parquet") for w in waves]
-        # manifest-derived delta row bound for the broadcast gate
-        # (_maybe_broadcast); None = no provable bound -> no hint
-        self._last_delta_bound = self._delta_rows_bound(waves) if waves else 0
+        bound, fetched = self._manifest_bounds(waves)
 
         resolved_deltas = None
         if delta_paths:
@@ -421,7 +424,10 @@ class WaveRunner:
                     .filter(F.col("_rn") == 1)
                     .drop("_rn")
                 )
-        return ckpt_df, resolved_deltas, ckpt
+        return Snapshot(
+            ckpt_df, resolved_deltas, ckpt, bound, ckpt_fetched,
+            resolved_deltas is not None and fetched != 0,
+        )
 
     def _ckpt_table_prefix(self) -> str:
         """Catalog-name prefix of this state dir's checkpoint tables."""
@@ -686,11 +692,6 @@ class WaveRunner:
         per-wave gate then builds shards over the DELTAS only and ORs them
         in (merge_bloom_shards) — without this, every wave re-shuffles the
         full fetched set just to rebuild an identical bloom."""
-        from commoncrawlnewsdataset_spark.frontier.core import (
-            bloom_num_bits,
-            build_bloom_shards,
-        )
-
         out = self._checkpoint_dir(upto)
         fetched = (
             self.spark.read.parquet(state_path)
@@ -788,32 +789,27 @@ class WaveRunner:
     # ---- one wave ----------------------------------------------------------
 
     def select_wave(
-        self, state: DataFrame, parts=None, only_hosts=None,
-        assume_no_fetched: bool = False,
-    ) -> DataFrame:
-        """Politeness-budgeted, robots-gated, dedup-guarded wave selection.
+        self, snap: Snapshot | None = None, state: DataFrame | None = None,
+        only_hosts=None,
+    ) -> Gated:
+        """Politeness-budgeted, robots-gated, dedup-guarded wave selection
+        over ``snap`` (default: a fresh snapshot read) and its composed
+        ``state`` (default: composed here).  Returns the ranked selection
+        with the URL-seen gate's record and caches (core.Gated).
 
         No global ordering here: a total wave_seq would be a single-partition
         window (wave_order is display-only); the deterministic ORDER CONTRACT
         (priority desc, discovered_ts, url) is what parity relies on.
 
-        ``parts`` (from _snapshot_parts) switches the URL-seen gate to the
-        SPLIT form over a checkpointed snapshot: checkpoint side joined as a
-        bucketed scan with zero Exchange, delta side broadcast, bloom built
-        incrementally from the persisted checkpoint shards.
-
         ``only_hosts`` (a small (host) DataFrame) restricts selection to
         those hosts — the partial-fallback leg of the candidate-head path.
         Per-host independence of the politeness rank (Window.partitionBy
         host) makes the restricted selection EXACTLY the full selection's
-        rows for those hosts.
-
-        ``assume_no_fetched`` (r8): the caller PROVED from wave metadata
-        that the state holds no fetched rows (the only committed wave is a
-        load_seeds wave, whose rows are all status=pending) — the URL-seen
-        gate is the identity on such a state, so skip it, including its
-        emptiness-probe job.  filter_unseen(pending, ∅) ≡ pending, so the
-        selection is provably unchanged."""
+        rows for those hosts."""
+        if snap is None:
+            snap = self._snapshot_parts()
+        if state is None:
+            state = self._compose_state(snap)
         pending = state.filter(F.col("status") == "pending")
         if only_hosts is not None:
             pending = pending.join(F.broadcast(only_hosts), "host", "semi")
@@ -839,14 +835,31 @@ class WaveRunner:
                         ).alias("budget"),
                     )
                 )
-        if assume_no_fetched:
-            unseen = pending
-        elif parts is not None and parts[0] is not None:
-            unseen = self._filter_unseen_split(pending, parts)
-        else:
-            fetched = state.filter(F.col("status") == "fetched").select("url")
-            unseen = filter_unseen(pending, fetched)
-        return politeness_rank(unseen, self.per_host_budget, self.nsalt, host_budgets)
+        gate = self._url_seen_gate(pending, snap)
+        return gate._replace(
+            df=politeness_rank(gate.df, self.per_host_budget, self.nsalt, host_budgets)
+        )
+
+    def _url_seen_gate(self, candidates: DataFrame, snap: Snapshot) -> Gated:
+        """``candidates`` minus the snapshot's fetched urls.  A part the
+        manifests prove fetch-free is passed as absent, so a frontier that
+        has fetched nothing yet (a seed load, a wave whose fetches all
+        failed) skips the gate at no job.  'fetched' is terminal (requeue
+        moves failed->pending only), so ckpt_fetched ∪ delta_fetched IS the
+        resolved fetched set — no subtraction of superseded checkpoint rows
+        is needed."""
+
+        def fetched(part: DataFrame) -> DataFrame:
+            return part.filter(F.col("status") == "fetched").select("url")
+
+        return url_seen_gate(
+            candidates,
+            fetched(snap.ckpt) if snap.ckpt_fetched else None,
+            fetched(snap.deltas) if snap.deltas_fetched else None,
+            recent_bound=snap.delta_bound,
+            broadcast_max=self.broadcast_delta_max,
+            checkpoint_shards=self._ckpt_bloom(snap.ckpt_wave),
+        )
 
     def _crawl_delay_budgets(self) -> DataFrame | None:
         """(host, budget) overrides from robots crawl-delays: the per-host
@@ -868,46 +881,20 @@ class WaveRunner:
             ).cast("int").alias("budget"),
         )
 
-    def _filter_unseen_split(self, pending: DataFrame, parts) -> DataFrame:
-        """URL-seen gate in SPLIT form over a checkpointed snapshot: the
-        checkpoint's fetched urls join as the (bucketed) scan, the deltas'
-        fetched urls broadcast, and the bloom starts from the checkpoint's
-        persisted shards."""
-        from commoncrawlnewsdataset_spark.frontier.core import filter_unseen_split
-
-        ckpt_df, deltas, ckpt_wave = parts
-        big_seen = ckpt_df.filter(F.col("status") == "fetched").select("url")
-        small_seen = (
-            deltas.filter(F.col("status") == "fetched").select("url")
-            if deltas is not None
-            else None
-        )
-        # 'fetched' is terminal (requeue moves failed->pending only), so
-        # ckpt_fetched ∪ delta_fetched IS the resolved fetched set — no
-        # subtraction of superseded checkpoint rows needed
-        bloom = self._ckpt_bloom(ckpt_wave)
-        return filter_unseen_split(
-            pending,
-            big_seen,
-            small_seen,
-            num_shards=bloom[1]["num_shards"] if bloom else 16,
-            big_shards=bloom[0] if bloom else None,
-            m_bits_per_shard=bloom[1]["m_bits_per_shard"] if bloom else None,
-        )
-
     # partial-fallback bounds: more invalid hosts than BOTH of these and
     # the whole wave takes the full path (the invalid-host list must stay
     # broadcastable and the candidate leg must still be the common case)
     HEAD_PARTIAL_MAX_HOSTS = 100_000
     HEAD_PARTIAL_MAX_FRACTION = 0.10
 
-    def _select_wave_head(self, head, parts):
+    def _select_wave_head(self, head, snap: Snapshot):
         """Candidate-head wave selection (VERDICT r6 #3): rank only
         head ∪ post-compaction deltas instead of the full pending set.
 
-        Returns ``(selected, invalid_hosts)``:
+        Returns ``(selected, invalid_hosts)``, ``selected`` a core.Gated
+        whose caches include the gated candidates:
 
-        - ``(df, None)`` — every truncated host PROVABLY selects
+        - ``(sel, None)`` — every truncated host PROVABLY selects
           identically from the candidates: a host whose pending set was
           cut at H needs >= budget un-superseded head rows surviving the
           gates — those rows keep their compaction-time total order, which
@@ -916,7 +903,7 @@ class WaveRunner:
           deltas and therefore IS a candidate).  Hosts first seen after
           compaction and un-truncated hosts are complete in the candidate
           set by construction.
-        - ``(df, invalid_df)`` — PARTIAL (r7.2): ``df`` covers the valid
+        - ``(sel, invalid_df)`` — PARTIAL (r7.2): ``sel`` covers the valid
           hosts from candidates; the caller runs the full-scan selection
           restricted to ``invalid_df``'s hosts and unions.  Per-host rank
           independence makes the union exactly the full selection, so one
@@ -928,16 +915,14 @@ class WaveRunner:
           reprioritize superseding everything): full path.
         """
         head_df, counts, meta = head
-        deltas = parts[1]
+        deltas = snap.deltas
         H = int(meta["H"])
         if H < 2 * self.per_host_budget:
             return None, None  # a head this shallow drains immediately
         head_tag = head_df.withColumn("_h", F.lit(True))
         if deltas is not None:
-            # same size gate as _compose_state (VERDICT r7 #1): past the
-            # bound the hint drops and AQE chooses the join
             cand = head_tag.join(
-                self._maybe_broadcast(deltas.select("url")), "url", "left_anti"
+                self._hinted(deltas.select("url"), snap.delta_bound), "url", "left_anti"
             ).unionByName(
                 deltas.select(*head_df.columns).withColumn("_h", F.lit(False))
             )
@@ -947,7 +932,9 @@ class WaveRunner:
         if self.use_robots and self.robots_rules is not None:
             pending = gate_by_robots(pending, self.robots_rules)
         host_budgets = self._crawl_delay_budgets()
-        unseen = self._filter_unseen_split(pending, parts).cache()
+        gate = self._url_seen_gate(pending, snap)
+        unseen = gate.df.cache()
+        cached = gate.cached + [unseen]
         # validity: every TRUNCATED host must still hold >= budget gated,
         # un-superseded head survivors (their compaction order dominates
         # all excluded rows, so the true top-budget is inside the
@@ -980,7 +967,8 @@ class WaveRunner:
                 len(invalid_hosts) > self.HEAD_PARTIAL_MAX_HOSTS
                 or len(invalid_hosts) > self.HEAD_PARTIAL_MAX_FRACTION * max(1, n_hosts)
             ):
-                unseen.unpersist()
+                for df in cached:
+                    df.unpersist()
                 return None, None  # beyond the partial bounds: full path
             invalid_df = self.spark.createDataFrame(
                 [(h,) for h in invalid_hosts], "host string"
@@ -989,14 +977,10 @@ class WaveRunner:
         else:
             invalid_df = None
             cand_pending = unseen
-        self._head_unseen_cache = unseen  # run_wave unpersists it at wave end
-        return (
-            politeness_rank(
-                cand_pending.drop("_h"), self.per_host_budget, self.nsalt,
-                host_budgets,
-            ),
-            invalid_df,
+        ranked = politeness_rank(
+            cand_pending.drop("_h"), self.per_host_budget, self.nsalt, host_budgets
         )
+        return Gated(ranked, gate.record, cached), invalid_df
 
     def _delta_file_rows(self, delta_path: str) -> dict[int, int]:
         """Per-file row counts of a written delta, read from the parquet
@@ -1131,46 +1115,41 @@ class WaveRunner:
         # directly and the composed state is built FROM them (a separate
         # self.state() call would re-resolve; the delta window additionally
         # caches because the gates reference it ~3x per wave — r5 review
-        # finding)
-        ckpt_df, deltas, ckpt_wave = self._snapshot_parts()
-        if deltas is not None:
-            deltas = deltas.cache()
-        parts = (ckpt_df, deltas, ckpt_wave)
+        # finding).  Every cache the wave makes lands in `cached` and is
+        # unpersisted after the wave's last action.
+        snap = self._snapshot_parts()
+        if snap.deltas is not None:
+            snap = snap._replace(deltas=snap.deltas.cache())
+        cached = [snap.deltas]
+        gates = {}
         state = None
-        selected = None
+        sel = None
         head_used = False
-        self._head_unseen_cache = None
-        head = None if self.adaptive_budgets else self._read_head(ckpt_wave)
+        head = None if self.adaptive_budgets else self._read_head(snap.ckpt_wave)
         if head is not None:
             # candidate-head selection (VERDICT r6 #3): rank only head ∪
             # deltas; the FULL pending set is neither resolved nor scanned
             # this wave unless validity fails
-            selected, invalid = self._select_wave_head(head, parts)
-            head_used = selected is not None
+            sel, invalid = self._select_wave_head(head, snap)
+            head_used = sel is not None
             if invalid is not None:
                 # partial fallback (r7.2): full-scan selection for the
                 # drained hosts only; per-host rank independence makes the
                 # union exact
                 head_used = "partial"
-                state = self._compose_state(ckpt_df, deltas).cache()
-                selected = selected.unionByName(
-                    self.select_wave(state, parts, only_hosts=invalid)
-                )
-        if selected is None:
-            state = self._compose_state(ckpt_df, deltas)
-            if ckpt_df is not None:  # else the state IS the cached deltas
+                state = self._compose_state(snap).cache()
+                rest = self.select_wave(snap, state, only_hosts=invalid)
+                gates["url_seen_partial"] = rest.record
+                cached += rest.cached
+                sel = sel._replace(df=sel.df.unionByName(rest.df))
+        if sel is None:
+            state = self._compose_state(snap)
+            if snap.ckpt is not None:  # else the state IS the cached deltas
                 state = state.cache()
-            # r8: on the first wave after a seed load (the only committed
-            # wave is a load_seeds wave), every row is status=pending by
-            # construction — the URL-seen gate is the identity and its
-            # emptiness-probe job is pure cost.  PROVEN from the wave-0
-            # manifest ("seeded" is written only by load_seeds; fork
-            # manifests, which can carry fetched rows, say "forked_from").
-            seed_only = (
-                self.committed_waves() == [0]
-                and "seeded" in self.read_manifest(0)
-            )
-            selected = self.select_wave(state, parts, assume_no_fetched=seed_only)
+            sel = self.select_wave(snap, state)
+        gates["url_seen"] = sel.record
+        cached += [state] + sel.cached
+        selected = sel.df
         timed("plan")
 
         results = self._fetch(selected)
@@ -1208,24 +1187,26 @@ class WaveRunner:
             else:
                 fetched = outcome.filter(F.col("status") == "fetched")
             keyed = with_frontier_keys(self.link_expander(fetched))
-            if ckpt_df is not None:
-                # split gate: the frontier-sized component joins as the
-                # bucketed checkpoint scan (no Exchange); only the
-                # wave-bounded component (deltas + this wave's outcomes)
-                # broadcasts
-                from commoncrawlnewsdataset_spark.frontier.core import (
-                    filter_unseen_split,
-                )
-
-                known_small = outcome.select("url")
-                if deltas is not None:
-                    known_small = known_small.unionByName(deltas.select("url"))
-                gated = filter_unseen_split(
-                    keyed, ckpt_df.select("url"), known_small, use_bloom=False
-                )
-            else:
-                known = state.select("url").unionByName(outcome.select("url"))
-                gated = filter_unseen(keyed, known, use_bloom=False)
+            # every url the frontier knows, whatever its status: the
+            # checkpoint scan (no Exchange) and the wave-bounded rest — the
+            # deltas plus this wave's outcomes, whose rows the footers count
+            known_recent = outcome.select("url")
+            if snap.deltas is not None:
+                known_recent = known_recent.unionByName(snap.deltas.select("url"))
+            recent_bound = (
+                None if snap.delta_bound is None
+                else snap.delta_bound + sum(part_rows.values())
+            )
+            discovery = url_seen_gate(
+                keyed,
+                snap.ckpt.select("url") if snap.ckpt is not None else None,
+                known_recent,
+                recent_bound=recent_bound,
+                broadcast_max=self.broadcast_delta_max,
+                bloom=False,
+            )
+            gates["discovery"] = discovery.record
+            gated = discovery.df
             # Deterministic representative per discovered url (NOT
             # dropDuplicates, which picks an arbitrary row under parallelism):
             # priority feeds politeness ranking, so crawl order / resume
@@ -1265,10 +1246,9 @@ class WaveRunner:
                 .collect()
             ]
             timed("host_stats")
-        for df in (state, deltas, self._head_unseen_cache):
+        for df in cached:
             if df is not None:
                 df.unpersist()
-        self._head_unseen_cache = None
 
         elapsed = time.time() - t0
         manifest = {
@@ -1279,6 +1259,7 @@ class WaveRunner:
             "n_failed": status_counts.get("failed", 0),
             "n_discovered": status_counts.get("pending", 0),
             "head_used": head_used,
+            "gates": gates,
             "per_partition_rows": [
                 {"partition": p, "rows": n} for p, n in sorted(part_rows.items())
             ],

@@ -313,23 +313,6 @@ def simhash(text: Column, bits: int = 32) -> Column:
     return simhash_from_hashes(token_hashes(text), bits)
 
 
-def simhash_groups(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
-    """Docs sharing an identical simhash signature (collision groups) —
-    the scale-path first stage; Hamming-ball probing extends it by banding
-    the signature, same as minhash bands.  r8 staging: the tokenless rows
-    (the only NULL signatures) are dropped by the cheap scan predicate and
-    token hashes materialize once as a column."""
-    sh = (
-        df.filter(min_tokens_pred(F.col(text_col), 1))
-        .select(F.col(id_col).alias("id"), token_hashes(F.col(text_col)).alias("_th"))
-        .select("id", simhash_from_hashes(F.col("_th"), bits).alias("simhash"))
-    )
-    return (
-        sh.groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min("id").alias("min_id"))
-    )
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
@@ -510,7 +493,7 @@ def dedup_against_store(
 
     Returns the surviving rows of the new batch.  At 100 TB the store is
     fingerprints only (16 bytes/doc); when it outgrows a direct anti-join,
-    the bloom front (frontier.core.filter_unseen) slots in unchanged —
+    the bloom front (frontier.core.url_seen_gate) slots in unchanged —
     same key shape, same no-false-negative contract."""
     import os
 

@@ -42,10 +42,6 @@ def anti_join_tld_exclusions(
     return df.join(dim, on=tld_col, how="left_anti")
 
 
-def drop_null_text(df: DataFrame, col: str = "text") -> DataFrame:
-    return df.filter(F.col(col).isNotNull())
-
-
 def having_count_gt(df: DataFrame, key: str, n: int) -> DataFrame:
     """F6/A1: groupBy(key).count() HAVING count > n — map-side partial
     aggregation comes free from the hash aggregate."""

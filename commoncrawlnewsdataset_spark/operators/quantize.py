@@ -66,11 +66,3 @@ def pack_binary_bytes(vec: Column) -> Column:
             lambda acc, b: acc * 2 + b,
         ),
     )
-
-
-def with_quantized(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Full S8 stage: embeddings + int8 + binary columns in one projection."""
-    lo, hi = calibration_ranges(emb, vec_col)
-    return emb.withColumn("int8_embedding", quantize_int8(F.col(vec_col), lo, hi)).withColumn(
-        "binary_embedding", pack_binary_bytes(F.col(vec_col))
-    )

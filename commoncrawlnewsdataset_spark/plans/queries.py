@@ -2198,9 +2198,9 @@ def md5_fetch(url: str, max_retries: int = 5) -> tuple[bool, int, int]:
 
 
 def _ephemeral_run_dir(*subdirs: str) -> tuple[str, ...]:
-    """Per-user run-scoped scratch dirs for queries that drive a WaveRunner
-    (ADVICE r6 hygiene, shared by frontier_waves / crawl_order / the
-    capstone): created under the uid-scoped cache root, removed at
+    """Per-user run-scoped scratch dirs for queries that write state
+    (ADVICE r6 hygiene: the WaveRunner of frontier_waves / crawl_order /
+    the capstone, the fingerprint store of dedup_incremental): created under the uid-scoped cache root, removed at
     interpreter exit (the returned plans only read parquet that is
     materialized before exit), with a 6h age sweep for leftovers from
     crashed sessions."""
@@ -2571,11 +2571,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedups within itself.  The oracle replays both batches in SQL, so the
     green row certifies the store's cross-batch semantics, not just
     single-batch dedup."""
-    import tempfile
-
     from commoncrawlnewsdataset_spark.operators.dedup import dedup_against_store
 
-    store = tempfile.mkdtemp(prefix="dedup-store-")
+    (store,) = _ephemeral_run_dir("dedup-store")
     docs = _t(spark, sf_dir, "documents")
     b1 = dedup_against_store(
         docs.filter(F.col("doc_id") < DEDUP_STORE_SPLIT), store, "doc_id", "text"

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from commoncrawlnewsdataset_spark.frontier.core import (
     build_bloom_shards,
     bloom_probe,
-    filter_unseen,
+    url_seen_gate,
     with_frontier_keys,
 )
 from commoncrawlnewsdataset_spark.frontier.politeness import politeness_rank
@@ -105,14 +105,14 @@ def test_bloom_no_false_negatives_and_exact_backstop(spark):
     # every truly-fetched url must be flagged maybe_seen (no false negatives)
     missed = probed.join(fetched, "url", "left_semi").filter(~F.col("maybe_seen")).count()
     assert missed == 0
-    # end-to-end: bloom path == plain anti-join (bit-for-bit same url set)
-    with_bloom = sorted(
-        r["url"] for r in filter_unseen(seeds, fetched, use_bloom=True, num_shards=4).select("url").collect()
-    )
-    exact = sorted(
-        r["url"] for r in filter_unseen(seeds, fetched, use_bloom=False).select("url").collect()
-    )
-    assert with_bloom == exact
+    # end-to-end: the gate's bloom path == plain anti-join (bit-for-bit
+    # same url set), with the seen set as either part
+    def gated(*parts, **kw):
+        return sorted(r["url"] for r in url_seen_gate(seeds, *parts, **kw).df.collect())
+
+    exact = gated(None, fetched, bloom=False)
+    assert exact == sorted(r["url"] for r in seeds.join(fetched, "url", "left_anti").collect())
+    assert gated(None, fetched) == gated(fetched, None) == exact
 
 
 def test_robots_gating(spark):
@@ -557,19 +557,23 @@ def test_bloom_probe_stays_jvm_side(spark):
     bloom BUILD's applyInPandas over tiny shard groups is the only python)."""
     import contextlib
     import io
+    import re
 
     seeds = with_frontier_keys(_seeds_df(spark, 300)).select("url").distinct()
     fetched = seeds.limit(50)
-    out = filter_unseen(seeds, fetched, use_bloom=True, num_shards=4)
+    out = url_seen_gate(seeds, None, fetched)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
+        out.df.explain("formatted")
     plan = buf.getvalue()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
-    # bloom build only: one FlatMapGroupsInPandas subtree per union branch
-    # (each also appears once in the formatted detail section)
-    assert plan.count("FlatMapGroupsInPandas") <= 4
+    # bloom build only, and ONE of it: both union branches scan the same
+    # cached shard set, so the formatted plan numbers one build node
+    assert len(set(re.findall(r"FlatMapGroupsInPandas \((\d+)\)", plan))) == 1, plan
+    (shards,) = out.cached
+    assert shards.is_cached
     assert "BroadcastHashJoin" in plan  # bitset attaches via broadcast
+    shards.unpersist()
 
 
 def test_expire_snapshots_horizon_clamps_to_checkpoint(spark, tmp_path):
@@ -715,7 +719,7 @@ def test_reprioritize_with_pagerank_scores(spark, tmp_path):
     )
     n = runner.reprioritize(lambda pending: F.coalesce(mapping[F.col("host")], F.lit(0.0)))
     assert n == 9
-    sel = runner.select_wave(runner.state()).collect()
+    sel = runner.select_wave().df.collect()
     by_host = {r["host"]: r["priority"] for r in sel}
     assert (by_host["h2.example.org"] > by_host["h1.example.org"]
             > by_host["h0.example.org"])
@@ -863,10 +867,10 @@ def test_bloom_probe_word_array_plan_shape(spark):
 
     seeds = with_frontier_keys(_seeds_df(spark, 300)).select("url").distinct()
     fetched = seeds.limit(50)
-    out = filter_unseen(seeds, fetched, use_bloom=True, num_shards=4)
+    out = url_seen_gate(seeds, None, fetched)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
+        out.df.explain("formatted")
     plan = buf.getvalue().lower()
     assert "getbit" in plan
     assert "element_at" in plan
@@ -1169,8 +1173,6 @@ def test_bucketed_state_gate_joins_exchange_free(spark, tmp_path):
     import contextlib
     import io
 
-    from commoncrawlnewsdataset_spark.frontier.core import filter_unseen_split
-
     buck = _bucketed_runner(spark, str(tmp_path / "bk"), 8)
     urls = [f"https://c{i % 4}.example.org/p/{i}" for i in range(40)]
     buck.load_seeds(_parity_seeds(spark, urls))
@@ -1178,10 +1180,18 @@ def test_bucketed_state_gate_joins_exchange_free(spark, tmp_path):
     buck.compact()
     buck.run_wave()
 
-    ckpt_df, deltas, ckpt_wave = buck._snapshot_parts()
-    assert ckpt_df is not None and ckpt_wave is not None
-    big = ckpt_df.filter(F.col("status") == "fetched").select("url")
-    small = deltas.select("url") if deltas is not None else None
+    snap = buck._snapshot_parts()
+    ckpt_wave = snap.ckpt_wave
+    assert snap.ckpt is not None and ckpt_wave is not None
+    big = snap.ckpt.filter(F.col("status") == "fetched").select("url")
+    small = snap.deltas.select("url") if snap.deltas is not None else None
+
+    def gate(big_side):
+        return url_seen_gate(
+            cands, big_side, small, recent_bound=snap.delta_bound,
+            broadcast_max=buck.broadcast_delta_max, bloom=False,
+        ).df
+
     cands = spark.createDataFrame(
         [(u + "/new",) for u in urls], "url string"
     )
@@ -1200,8 +1210,7 @@ def test_bucketed_state_gate_joins_exchange_free(spark, tmp_path):
             # "(14) BroadcastExchange" deliberately NOT counted
             return p, len(re.findall(r"\(\d+\) Exchange\b", p))
 
-        gate = filter_unseen_split(cands, big, small, use_bloom=False)
-        plan, n_exchange_bucketed = shuffle_exchanges(gate)
+        plan, n_exchange_bucketed = shuffle_exchanges(gate(big))
         assert "SortMergeJoin" in plan and "LeftAnti" in plan, plan
         assert "ccn_state_" in plan, plan  # right side IS the bucketed table
         # the checkpoint-side subtree (between the SMJ's right Sort and the
@@ -1217,8 +1226,7 @@ def test_bucketed_state_gate_joins_exchange_free(spark, tmp_path):
             os.path.join(buck._checkpoint_dir(ckpt_wave), "state.parquet")
         )
         big_plain = plain_ckpt.filter(F.col("status") == "fetched").select("url")
-        gate_plain = filter_unseen_split(cands, big_plain, small, use_bloom=False)
-        plan2, n_exchange_plain = shuffle_exchanges(gate_plain)
+        plan2, n_exchange_plain = shuffle_exchanges(gate(big_plain))
         assert n_exchange_plain == n_exchange_bucketed + 1, (
             f"bucketed={n_exchange_bucketed} plain={n_exchange_plain}\n" + plan2
         )

@@ -88,7 +88,7 @@ def test_frontier_select_no_cartesian(spark, tmp_path):
         robots_rules=spark.createDataFrame(make_robots_pdf()),
     )
     runner.load_seeds(spark.createDataFrame(make_seeds_pdf(100), SEEDS_SCHEMA))
-    plan = plan_of(runner.select_wave(runner.state()))
+    plan = plan_of(runner.select_wave().df)
     assert "CartesianProduct" not in plan
     # robots gating is a broadcast anti-join, not a shuffled join
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
@@ -179,3 +179,27 @@ def test_query_vec_fast_path_only_when_footers_prove_it(spark, tmp_path):
     _write_embeddings(multi / "part-0.parquet", [7, 5])
     _write_embeddings(multi / "part-1.parquet", [9, 3])
     assert Q._query_vec(spark, str(tmp_path / "multi")) == [1.0, 1.0]
+
+
+def test_dedup_incremental_store_is_run_scoped(spark, monkeypatch):
+    """The dedup_incremental leaf keeps its fingerprint store in a
+    run-scoped dir under cache_root()/runs (removed at interpreter exit,
+    swept after 6 h), never in a bare temp dir that outlives the run."""
+    import os
+
+    from commoncrawlnewsdataset_spark.cache import cache_root
+    from commoncrawlnewsdataset_spark.operators import dedup
+
+    stores = []
+    real = dedup.dedup_against_store
+
+    def spy(df, store, *args, **kwargs):
+        stores.append(store)
+        return real(df, store, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "dedup_against_store", spy)
+    assert Q.q_dedup_incremental(spark, SF).count() > 0
+    runs = os.path.join(cache_root(), "runs")
+    assert len(stores) == 2 and len(set(stores)) == 1
+    assert os.path.dirname(os.path.dirname(stores[0])) == runs
+    assert os.path.isdir(stores[0])

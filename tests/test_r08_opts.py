@@ -2,9 +2,12 @@
 
 Every r8 optimization is a plan change that must NOT change results:
 - single-delta snapshot reads skip the latest-record window,
-- the first wave after a seed load skips the URL-seen gate,
-- the post-compaction delta broadcast hints are size-gated (hint-on ≡
-  hint-off, and an unprovable bound drops the hint),
+- a frontier whose manifests prove no fetched row skips the URL-seen gate,
+- the recent-side broadcast hints follow one size rule (hint-on ≡
+  hint-off, an unprovable bound drops the hint, and the URL-seen and
+  discovery gates drop it past broadcast_delta_max),
+- the URL-seen gate builds each bloom shard once per wave and records
+  what it did in the wave manifest,
 - with_sql_text_stats computes each split array once (same values),
 - the quality_metrics_udf ASCII guard rides the lazy plan.
 """
@@ -13,10 +16,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from commoncrawlnewsdataset_spark.frontier import core, waves
+from commoncrawlnewsdataset_spark.frontier.core import broadcast_fits
 from commoncrawlnewsdataset_spark.frontier.waves import WaveRunner, simulated_fetch
 
 
@@ -63,24 +70,28 @@ def test_snapshot_single_delta_no_window(spark, tmp_path):
 def test_first_wave_skips_urlseen_gate_equivalently(
     spark, tmp_path, monkeypatch, bucket_state
 ):
-    """Wave 1 after load_seeds with assume_no_fetched on (the run_wave
-    default now) must select exactly what the gated path selects, and the
-    selection run_wave plans holds no URL-seen gate whatever the bucket
-    count."""
+    """Wave 1 after load_seeds: the manifests prove no fetched row, so the
+    gate is the identity.  It must select exactly what the gated path
+    selects, and the selection run_wave plans holds no URL-seen gate
+    whatever the bucket count."""
     runner = WaveRunner(spark, str(tmp_path / "s"), per_host_budget=5,
                         use_robots=False, fetcher=simulated_fetch,
                         detailed_metrics=False, bucket_state=bucket_state)
     runner.load_seeds(_seed_df(spark))
-    state = runner.state()
-    fast = runner.select_wave(state, assume_no_fetched=True)
-    slow = runner.select_wave(state, assume_no_fetched=False)
+    snap = runner._snapshot_parts()
+    assert not snap.ckpt_fetched and not snap.deltas_fetched
+    fast = runner.select_wave(snap)
+    slow = runner.select_wave(snap._replace(deltas_fetched=True))
     cols = ("url", "rank")
-    assert _rows(fast, cols) == _rows(slow, cols)
+    assert _rows(fast.df, cols) == _rows(slow.df, cols)
+    assert fast.record == {"skipped": True} and not slow.record["skipped"]
 
     def has_gate(df):
         return "LeftAnti" in df._jdf.queryExecution().optimizedPlan().toString()
 
-    assert has_gate(slow) and not has_gate(fast)
+    assert has_gate(slow.df) and not has_gate(fast.df)
+    for df in slow.cached:
+        df.unpersist()
     # run_wave engages the fast path itself: its selection holds no gate
     # and commits the same selection as the gated one computed above
     planned = []
@@ -92,8 +103,9 @@ def test_first_wave_skips_urlseen_gate_equivalently(
 
     monkeypatch.setattr(runner, "select_wave", spy)
     manifest = runner.run_wave()
-    assert len(planned) == 1 and not has_gate(planned[0])
-    assert manifest["n_selected"] == len(_rows(slow, ("url",)))
+    assert len(planned) == 1 and not has_gate(planned[0].df)
+    assert manifest["n_selected"] == len(_rows(slow.df, ("url",)))
+    assert manifest["gates"]["url_seen"] == {"skipped": True}
 
 
 def _mk_compacted_runner(spark, tmp_path, **kw):
@@ -121,13 +133,15 @@ def test_broadcast_gate_hint_on_equals_hint_off(spark, tmp_path):
     assert _rows(on, ("url", "status", "wave", "host")) == _rows(
         off, ("url", "status", "wave", "host")
     )
-    # the gate actually flips the hint: bound is known and positive here
-    assert runner._last_delta_bound and runner._last_delta_bound > 0
-    assert runner._maybe_broadcast(on.select("url")) is not None
-    # hint-off runner must not broadcast
-    off_runner._last_delta_bound = runner._last_delta_bound
+    # the rule actually flips the hint: bound is known and positive here
+    bound = runner._snapshot_parts().delta_bound
+    assert bound and bound > 0
+    assert broadcast_fits(bound, runner.broadcast_delta_max)
     df = off.select("url")
-    assert off_runner._maybe_broadcast(df) is df  # unchanged, no hint
+    assert runner._hinted(df, bound) is not df
+    # hint-off runner must not broadcast
+    assert not broadcast_fits(bound, off_runner.broadcast_delta_max)
+    assert off_runner._hinted(df, bound) is df  # unchanged, no hint
 
 
 def test_broadcast_gate_unprovable_bound_drops_hint(spark, tmp_path):
@@ -140,8 +154,9 @@ def test_broadcast_gate_unprovable_bound_drops_hint(spark, tmp_path):
     forked.run_wave()
     # the fork's post-checkpoint waves have proper manifests, so bound is
     # provable again there; simulate the unprovable case directly:
-    assert runner._delta_rows_bound([0]) is not None  # seeded manifest
-    assert forked._delta_rows_bound([0]) is None      # forked_from manifest
+    assert runner._manifest_bounds([0]) == (400, 0)  # seeded manifest
+    assert forked._manifest_bounds([0]) == (None, None)  # forked_from manifest
+    assert not broadcast_fits(None, forked.broadcast_delta_max)
     st = forked.state()
     assert st.groupBy("url").count().filter("count > 1").count() == 0
 
@@ -157,14 +172,148 @@ def test_delta_rows_bound_from_manifests(spark, tmp_path):
     runner.requeue_failed()
     runner.reprioritize(lambda df: F.col("priority") * 2)
     waves = runner.committed_waves()
-    bound = runner._delta_rows_bound(waves)
-    actual = sum(
-        spark.read.parquet(
-            os.path.join(runner._wave_dir(w), "delta.parquet")
-        ).count()
+    bound, fetched = runner._manifest_bounds(waves)
+    deltas = [
+        spark.read.parquet(os.path.join(runner._wave_dir(w), "delta.parquet"))
         for w in waves
+    ]
+    assert bound is not None and bound >= sum(d.count() for d in deltas)
+    assert fetched == sum(d.filter("status = 'fetched'").count() for d in deltas) > 0
+
+
+def _expander(fetched):
+    """Two links per fetched page: a fresh child and a back-link into the
+    seed url space."""
+    h = F.abs(F.hash("url"))
+    return fetched.select(
+        F.explode(F.array(
+            F.concat(F.col("url"), F.lit("/c")),
+            F.concat(F.lit("https://h"), (h % 7).cast("string"),
+                     F.lit(".example.org/p/"), (h % 500).cast("string")),
+        )).alias("url"),
+        (F.col("priority") / 2).alias("priority"),
+        "discovered_ts",
     )
-    assert bound is not None and bound >= actual
+
+
+def test_gate_decisions_recorded_in_manifest(spark, tmp_path):
+    """Every wave manifest records what the URL-seen and discovery gates
+    did: skipped by the manifest proof, where the bloom came from, and
+    whether the recent side was broadcast under which row bound."""
+    kw = dict(per_host_budget=5, use_robots=False, fetcher=simulated_fetch,
+              detailed_metrics=False, bucket_state=4, head_factor=0,
+              link_expander=_expander)
+    runner = WaveRunner(spark, str(tmp_path / "s"), **kw)
+    runner.load_seeds(_seed_df(spark))
+
+    def bound(upto, since=0):
+        return runner._manifest_bounds(list(range(since, upto + 1)))[0]
+
+    m1 = runner.run_wave()  # seed-only: nothing fetched yet
+    assert m1["gates"]["url_seen"] == {"skipped": True}
+    assert m1["gates"]["discovery"] == {
+        "skipped": False, "bloom": None, "broadcast": True,
+        "bound": bound(0) + m1["n_selected"],
+    }
+    m2 = runner.run_wave()  # before any checkpoint: shards built this wave
+    assert m2["gates"]["url_seen"] == {
+        "skipped": False, "bloom": "built", "broadcast": True, "bound": bound(1),
+    }
+    runner.compact()
+    m3 = runner.run_wave()  # right after compaction: persisted shards only
+    assert m3["gates"]["url_seen"] == {
+        "skipped": False, "bloom": "persisted", "broadcast": None, "bound": 0,
+    }
+    m4 = runner.run_wave()  # persisted shards OR-ed with this wave's build
+    assert m4["gates"]["url_seen"] == {
+        "skipped": False, "bloom": "both", "broadcast": True, "bound": bound(3, 3),
+    }
+    off = WaveRunner(spark, str(tmp_path / "off"), broadcast_delta_max=0, **kw)
+    off.load_seeds(_seed_df(spark))
+    off.run_wave()
+    m = off.run_wave()
+    assert m["gates"]["url_seen"]["broadcast"] is False
+    assert m["gates"]["discovery"]["broadcast"] is False
+    assert m["n_selected"] == m2["n_selected"]
+
+
+def test_bloom_shards_built_once_per_wave(spark, tmp_path, monkeypatch):
+    """The URL-seen gate's union branches (definitely-new ∪ re-checked)
+    both probe the shard set; each shard must still be BUILT once per
+    wave — before any checkpoint and after one (persisted ∪ built)."""
+    marks = tmp_path / "marks"
+    marks.mkdir()
+    build = core.build_bloom_shards
+
+    def counting_build(*args, **kwargs):
+        out_dir = str(marks)
+
+        def mark(batches):
+            import uuid
+
+            for pdf in batches:
+                for shard in pdf["shard"]:
+                    open(os.path.join(out_dir, f"{shard}-{uuid.uuid4().hex}"), "w").close()
+                yield pdf
+
+        return build(*args, **kwargs).mapInPandas(mark, core.BLOOM_SHARD_SCHEMA)
+
+    monkeypatch.setattr(core, "build_bloom_shards", counting_build)
+    runner = WaveRunner(spark, str(tmp_path / "s"), per_host_budget=5,
+                        use_robots=False, fetcher=simulated_fetch,
+                        detailed_metrics=False, bucket_state=4, head_factor=0)
+    runner.load_seeds(_seed_df(spark, n=1200, n_hosts=20))
+
+    def builds_per_shard(step):
+        for f in os.listdir(marks):
+            os.remove(marks / f)
+        step()
+        return Counter(f.split("-")[0] for f in os.listdir(marks))
+
+    assert builds_per_shard(runner.run_wave) == Counter()  # gate skipped
+    for wave in (2, 4):
+        built = builds_per_shard(runner.run_wave)
+        assert built and set(built.values()) == {1}, (wave, built)
+        if wave == 2:
+            builds_per_shard(runner.compact)
+            runner.run_wave()  # wave 3: persisted shards only
+
+
+@pytest.mark.parametrize("limit", [0, 10**9])
+def test_gates_follow_broadcast_bound(spark, tmp_path, monkeypatch, limit):
+    """The URL-seen backstop and the discovery gate broadcast their recent
+    side only within broadcast_delta_max: past it no anti-join of either
+    gate is a broadcast join (AQE's own broadcast switched off)."""
+    runner = WaveRunner(spark, str(tmp_path / "s"), per_host_budget=5,
+                        use_robots=False, fetcher=simulated_fetch,
+                        detailed_metrics=False, bucket_state=4, head_factor=0,
+                        link_expander=_expander, broadcast_delta_max=limit)
+    runner.load_seeds(_seed_df(spark))
+    runner.run_wave()
+    runner.compact()
+    runner.run_wave()
+    gated = []
+    gate = waves.url_seen_gate
+
+    def spy(*args, **kwargs):
+        gated.append(gate(*args, **kwargs))
+        return gated[-1]
+
+    monkeypatch.setattr(waves, "url_seen_gate", spy)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        m = runner.run_wave()
+        plans = [g.df._jdf.queryExecution().executedPlan().toString() for g in gated]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    hinted = limit > 0
+    assert len(plans) == 2  # the URL-seen gate and the discovery gate
+    for plan in plans:
+        assert "LeftAnti" in plan
+        assert bool(re.search(r"BroadcastHashJoin[^\n]*LeftAnti", plan)) == hinted, plan
+    assert m["gates"]["url_seen"]["broadcast"] is hinted
+    assert m["gates"]["discovery"]["broadcast"] is hinted
 
 
 def test_head_depth_scales_with_crawl_delay_override(spark, tmp_path):
